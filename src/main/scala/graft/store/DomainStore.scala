@@ -384,11 +384,14 @@ class DomainStore(val root: Path, val spec: DomainSpec, conf: Configuration) {
         // shuffle files live on), not java.io.tmpdir: on real executors
         // tmp is often a small root partition while spark.local.dir /
         // SPARK_LOCAL_DIRS point at the big disks (r16 verdict item 3).
-        // deleteOnExit is the leak backstop for a JVM killed mid-build
-        // (the finally below covers every non-fatal path).
-        val spill = java.io.File.createTempFile(
+        // The finally below deletes the spill on every non-fatal path; a
+        // task completion listener is the backstop for a task that ends
+        // another way. (deleteOnExit would add a JVM-global entry per
+        // shard build, never removed, for the executor's lifetime.)
+        val spill = DomainStore.createSpillFile(
           s"graft-index-$shard-", ".keys", DomainStore.sparkLocalDir(shard))
-        spill.deleteOnExit()
+        Option(org.apache.spark.TaskContext.get())
+          .foreach(_.addTaskCompletionListener[Unit](_ => spill.delete()))
         val artifact =
           try {
             var n = 0L
@@ -2001,6 +2004,20 @@ object DomainStore {
     if (d.isDirectory || d.mkdirs()) d
     else new java.io.File(System.getProperty("java.io.tmpdir"))
   }
+
+  /** A fresh spill file in `dir` (normally [[sparkLocalDir]]). A dir
+    * that cannot take the file (wrong owner, a read-only mount, removed
+    * since it was chosen) gets one retry on java.io.tmpdir instead of
+    * failing the publish — the spill is scratch, any local disk serves. */
+  private[store] def createSpillFile(
+      prefix: String, suffix: String, dir: java.io.File): java.io.File =
+    try java.io.File.createTempFile(prefix, suffix, dir)
+    catch {
+      case e: java.io.IOException =>
+        val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+        log.warn(s"spill dir $dir is not writable (${e.getMessage}); spilling to $tmp")
+        java.io.File.createTempFile(prefix, suffix, tmp)
+    }
 
   /** Deserialized index-sidecar probes kept per store (LRU). Sized so a
     * lookup-heavy session over a few domains keeps every hot shard's probe

@@ -26,7 +26,13 @@ import graft.core.DomainSpec
  *    serving box pulled for itself.
  *
  * `get` cost: one cached sidecar probe (definite misses never touch
- * data), then O(log n) positioned reads in the shard's [[KvFile]]. A
+ * data), then the shard's [[KvFile]] lookup — node-cached tree-top
+ * steps and a window finish, ~2 positioned reads warm. Localized shards
+ * sit on `LocalFileSystem`, where the cached reader holds the data file
+ * and its `.crc` open ([[LocalShardStream]]): a pread is one read of the
+ * checksum chunks it touches plus one read of their CRC32s, not the new
+ * Hadoop checksum checker (a stat, opens of the file and its `.crc`)
+ * the filesystem's own stream builds per pread. A
  * missing shard dir/file reads as "no keys on this shard" (an empty
  * shard writes no dir; a shard this box did not localize is
  * indistinguishable — route requests to hosted shards, like the
