@@ -2,6 +2,8 @@ package graft
 
 import java.util.Locale
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
 import graft.core.Sessions
 
 /**
@@ -11,20 +13,53 @@ import graft.core.Sessions
  * (count(*) would let Catalyst drop every computed column).
  */
 object Bench {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+  /** The scale factor the bench reads (`SPARK_GRAFT_SF_DIR`). */
+  private[graft] def sfDir: String =
+    sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+  /** The bench session: `local[SPARK_GRAFT_CPUS]` through the engine's
+    * one session builder. */
+  private[graft] def session(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = Sessions.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 
-    // Untimed warmup: run the sf0.001 flagship once so JIT + codegen +
-    // parquet-reader init aren't billed to whichever query sorts first.
-    try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
-    catch { case e: Throwable => System.err.println(s"[bench] warmup failed: $e") }
-    // The warmup built the sf0.001 flagship fixture; forget it so a bench
-    // at sf0.001 still times that domain build in pass 1.
+  /** Untimed warmup: run the sf0.001 flagship once so JIT + codegen +
+    * parquet-reader init aren't billed to whichever query runs first. */
+  private[graft] def warmUp(spark: SparkSession, tag: String): Unit = {
+    try noop(SparkEntry.entry(spark))
+    catch { case e: Throwable => System.err.println(s"[$tag] warmup failed: $e") }
+    // The warmup built the sf0.001 flagship fixture; forget it so a run
+    // at sf0.001 still times that domain build.
+    reset(spark)
+  }
+
+  /** Clear the cache and forget the domain fixtures, so the next pass
+    * re-does the real work (operator-internal persists would otherwise
+    * turn it into a cache read, and build queries would skip the build). */
+  private[graft] def reset(spark: SparkSession): Unit = {
     spark.catalog.clearCache()
     queries.Fixtures.reset()
+  }
+
+  /** Materialize through the noop sink (not count(), which would let
+    * Catalyst drop every computed column). */
+  private[graft] def noop(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
+  private[graft] def seconds(body: => Unit): Double = {
+    val t0 = System.nanoTime()
+    body
+    (System.nanoTime() - t0) / 1e9
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = Bench.sfDir
+    val spark = session()
+    warmUp(spark, "bench")
 
     // Stable order for comparable per-query numbers across rounds; the
     // query map is assembled once, outside anything timed.
@@ -33,116 +68,54 @@ object Bench {
     def runAll(): Map[String, (Double, Boolean)] = names.map { name =>
       val t0 = System.nanoTime()
       val ok =
-        try { qmap(name)(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
+        try { noop(qmap(name)(spark, sfDir)); true }
         catch { case e: Throwable => System.err.println(s"[bench] $name failed: $e"); false }
       name -> ((System.nanoTime() - t0) / 1e9, ok)
     }.toMap
     // Best of two full passes: wall-clock noise on a shared box swings
-    // single runs by ±50%. The cache is cleared between passes so each
-    // pass re-does the real work (operator-internal persists would
-    // otherwise turn pass 2 into a cache read), and the domain fixtures
-    // are forgotten so build queries time the build in every pass.
+    // single runs by ±50%. Cache and fixtures are reset between passes.
     val rep1 = runAll()
-    spark.catalog.clearCache()
-    queries.Fixtures.reset()
+    reset(spark)
     val rep2 = runAll()
-    // Sub-metrics: pipeline_dedup_index deliberately times the full index
-    // lifecycle; attribute its two halves so a regression points at the
-    // right one (build = band + publish the KV index domain; probe =
-    // delta banding + point lookups + exact verify). BEST OF TWO passes,
-    // like the queries: a single pass after ~5 min of prior work in this
-    // JVM once printed a 53.9 s probe for a pipeline whose isolated time
-    // is ~8 s (r5 verdict) — a 7× noise artifact defeats the submetric's
-    // whole purpose (regression attribution). Failures skip the field
-    // rather than kill the bench line.
+    // Sub-metrics: the index pipelines deliberately time the full index
+    // lifecycle; attribute the two halves so a regression points at the
+    // right one (build = derive + publish the index domain; probe = the
+    // delta's keys + point lookups + verify). The probe frame is built
+    // inside its timer; the build's fixture is memoized, so a probe never
+    // re-times it. BEST OF TWO passes, like the queries: a single pass
+    // after ~5 min of prior work in this JVM once printed a 53.9 s probe
+    // for a pipeline whose isolated time is ~8 s (r5 verdict) — a 7×
+    // noise artifact defeats the submetric's whole purpose (regression
+    // attribution). Failures skip the field rather than kill the bench line.
+    import queries.{PipelineQueries => P, SearchQueries => S}
+    val pipelines: Seq[(String, () => Any, () => DataFrame)] = Seq(
+      ("pipeline_dedup_index", () => P.dedupIndexStore(spark, sfDir),
+        () => P.dedupIndexProbe(spark, sfDir)),
+      ("pipeline_image_index", () => P.imageIndexStore(spark, sfDir),
+        () => P.imageIndexProbe(spark, sfDir)),
+      ("pipeline_semdedup_index", () => P.semIndexStore(spark, sfDir),
+        () => P.semIndexProbe(spark, sfDir)),
+      ("pipeline_ann_index", () => P.annIndexStore(spark, sfDir),
+        () => P.annIndexProbe(spark, sfDir)),
+      ("pipeline_annpq_index", () => P.annPqIndexStore(spark, sfDir),
+        () => P.annPqIndexProbe(spark, sfDir)),
+      ("text_search_topk", () => S.searchIndexStore(spark, sfDir),
+        () => S.searchProbe(spark, sfDir)),
+      ("text_search_phrase", () => S.positionalIndexStore(spark, sfDir),
+        () => graft.operators.Search.phraseSearch(
+          S.positionalIndexStore(spark, sfDir),
+          { import spark.implicits._; S.PhraseLits.toDF("query_id", "phrase") },
+          k = S.TopK)))
     def subPass(): Seq[(String, Double)] = {
-        spark.catalog.clearCache()
-        queries.Fixtures.reset()
-        val b0 = System.nanoTime()
-        queries.PipelineQueries.dedupIndexStore(spark, sfDir)
-        val buildSec = (System.nanoTime() - b0) / 1e9
-        val p0 = System.nanoTime()
-        queries.PipelineQueries.dedupIndexProbe(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
-        val probeSec = (System.nanoTime() - p0) / 1e9
-        // the image twin (build = decode + hash + band + publish the KV
-        // index; probe = delta hash + point lookups + popcount verify)
-        val ib0 = System.nanoTime()
-        queries.PipelineQueries.imageIndexStore(spark, sfDir)
-        val imgBuild = (System.nanoTime() - ib0) / 1e9
-        val ip0 = System.nanoTime()
-        queries.PipelineQueries.imageIndexProbe(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
-        val imgProbe = (System.nanoTime() - ip0) / 1e9
-        // the embedding twin (build = cell assignment + publish; probe =
-        // delta cells + point lookups + cosine verify of named rows)
-        val eb0 = System.nanoTime()
-        queries.PipelineQueries.semIndexStore(spark, sfDir)
-        val semBuild = (System.nanoTime() - eb0) / 1e9
-        val ep0 = System.nanoTime()
-        queries.PipelineQueries.semIndexProbe(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
-        val semProbe = (System.nanoTime() - ep0) / 1e9
-        // same attribution for the two ANN-serving pipelines (fixtures
-        // still fresh for their stores: reset() above cleared them)
-        val ab0 = System.nanoTime()
-        queries.PipelineQueries.annIndexStore(spark, sfDir)
-        val annBuild = (System.nanoTime() - ab0) / 1e9
-        val ap0 = System.nanoTime()
-        queries.PipelineQueries.annIndexProbe(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
-        val annProbe = (System.nanoTime() - ap0) / 1e9
-        val pb0 = System.nanoTime()
-        queries.PipelineQueries.annPqIndexStore(spark, sfDir)
-        val pqBuild = (System.nanoTime() - pb0) / 1e9
-        val pp0 = System.nanoTime()
-        queries.PipelineQueries.annPqIndexProbe(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
-        val pqProbe = (System.nanoTime() - pp0) / 1e9
-        // and the full-text index pipeline (build = inverted index +
-        // publish; probe = term lookups + lengths join + scoring + topk)
-        val sb0 = System.nanoTime()
-        queries.SearchQueries.searchIndexStore(spark, sfDir)
-        val searchBuild = (System.nanoTime() - sb0) / 1e9
-        val sp0 = System.nanoTime()
-        queries.SearchQueries.searchProbe(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
-        val searchProbe = (System.nanoTime() - sp0) / 1e9
-        // and the phrase pipeline (build = positional index + publish on
-        // the compressed engine; probe = postings lookups + anchor votes)
-        val pb2 = System.nanoTime()
-        queries.SearchQueries.positionalIndexStore(spark, sfDir)
-        val phraseBuild = (System.nanoTime() - pb2) / 1e9
-        val pp2 = System.nanoTime()
-        graft.operators.Search.phraseSearch(
-          queries.SearchQueries.positionalIndexStore(spark, sfDir),
-          { import spark.implicits._; queries.SearchQueries.PhraseLits.toDF("query_id", "phrase") },
-          k = queries.SearchQueries.TopK)
-          .write.format("noop").mode("overwrite").save()
-        val phraseProbe = (System.nanoTime() - pp2) / 1e9
-        Seq("pipeline_dedup_index_build" -> buildSec,
-          "pipeline_dedup_index_probe" -> probeSec,
-          "pipeline_image_index_build" -> imgBuild,
-          "pipeline_image_index_probe" -> imgProbe,
-          "pipeline_semdedup_index_build" -> semBuild,
-          "pipeline_semdedup_index_probe" -> semProbe,
-          "pipeline_ann_index_build" -> annBuild,
-          "pipeline_ann_index_probe" -> annProbe,
-          "pipeline_annpq_index_build" -> pqBuild,
-          "pipeline_annpq_index_probe" -> pqProbe,
-          "text_search_topk_build" -> searchBuild,
-          "text_search_topk_probe" -> searchProbe,
-          "text_search_phrase_build" -> phraseBuild,
-          "text_search_phrase_probe" -> phraseProbe)
+      reset(spark)
+      pipelines.flatMap { case (name, build, probe) =>
+        val buildSec = seconds(build())
+        Seq(s"${name}_build" -> buildSec, s"${name}_probe" -> seconds(noop(probe())))
+      }
     }
     val subMetrics: Seq[(String, Double)] =
-      try {
-        val s1 = subPass()
-        val s2 = subPass()
-        s1.zip(s2).map { case ((k, a), (k2, b)) =>
-          assert(k == k2); k -> math.min(a, b)
-        }
-      } catch {
+      try subPass().zip(subPass()).map { case ((k, a), (_, b)) => k -> math.min(a, b) }
+      catch {
         case e: Throwable =>
           System.err.println(s"[bench] submetrics failed: $e")
           Nil

@@ -79,7 +79,9 @@ object SynthScale {
     // absolute hot history (2M events on one user): at local[32] the
     // sf1 hot partition (200k rows) sorts inside a task's fixed
     // overhead, so the straggler only becomes measurable here — this is
-    // the table DebugEventSkew's max-task audit runs on.
+    // the table of the max-task audit in BASELINE.md "Round 10: sf1
+    // event-analytics audit with a skewed user" (recipe DebugEventSkew at
+    // commit 6547131).
     val skewOut = s"$out-skew"
     val r100 = explode(sequence(lit(0L), lit(99L))).as("r")
     spark.read.parquet(s"$src/events.parquet")

@@ -122,7 +122,9 @@ case class BoundedCollectAgg(
   // partial carries — the middle-zone reducer (a hot bucket spread so thin
   // no partial overflowed map-side ships partitions × cap entries to ONE
   // task) pays stream transport only, never per-entry parse (measured
-  // ~0.9M entries/s of parse avoided per task, DebugCapMidScale).
+  // ~0.9M entries/s of parse avoided per task; BASELINE.md "Round 15:
+  // the BoundedCollect middle zone", recipe DebugCapMidScale at commit
+  // 6547131).
   override def merge(b: BoundedCollectBuf, o: BoundedCollectBuf): BoundedCollectBuf = {
     if (!distinctMembers) {
       b.n += o.n

@@ -5,8 +5,9 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** The one place the engine's session tuning lives — every entry point
-  * (Bench, Verify, Smoke, Debug, Plans, tests) builds through here so a
-  * config change can't silently miss a runner. */
+  * (Bench, Profile, Verify, Smoke, Status, SynthScale, ServeBench,
+  * tests) builds through here so a config change can't silently miss a
+  * runner. */
 object Sessions {
 
   /** The engine's scalar kernels, exposed to plain SQL (`SELECT

@@ -1543,7 +1543,9 @@ class OperatorsSpec extends SparkSuite {
     // LINKED takedown twin: same logical result as the rebuild, with the
     // untouched shards carried by _links.json instead of raw copies —
     // the O(affected + delta) publish bound the 64Ki-shard regime needs
-    // (DebugTakedownShardScale measures it at scale). One removed doc on
+    // (measured at scale in BASELINE.md "Round 15: mass takedown at the
+    // linked-publish 64Ki-shard regime", recipe DebugTakedownShardScale
+    // at commit 6547131). One removed doc on
     // a 64-shard domain guarantees untouched shards exist.
     val oneId = removedDocs.orderBy(col("doc_id")).limit(1).collect()(0).getLong(0)
     val spec64 = spec.copy(numShards = 64)

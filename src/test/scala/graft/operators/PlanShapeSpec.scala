@@ -99,38 +99,9 @@ class PlanShapeSpec extends SparkSuite {
 
   /** Total shuffle records written while running `df`, scoped by job
     * group (robust under sbt's parallel suites). */
-  private def shuffleRecordsWritten(df: DataFrame): Long = {
-    import org.apache.spark.scheduler._
-    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val recs = new java.util.concurrent.atomic.LongAdder
-    val done = new java.util.concurrent.atomic.LongAdder
-    val group = s"shuffle-pin-${System.nanoTime()}"
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (group == j.properties.getProperty("spark.jobGroup.id"))
-          j.stageInfos.foreach(si => stages.add(si.stageId))
-      override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
-        if (stages.contains(s.stageInfo.stageId)) {
-          recs.add(s.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten)
-          done.increment()
-        }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      spark.sparkContext.setJobGroup(group, "shuffle-volume pin")
-      df.write.format("noop").mode("overwrite").save()
-      spark.sparkContext.clearJobGroup()
-      // listener events are async: wait for the job-start events to
-      // ARRIVE (stages would otherwise still be empty and the drain
-      // condition vacuously satisfied at 0 records) and then for the
-      // measured stages to drain
-      val deadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
-      while ((stages.isEmpty || done.sum() < stages.size()) &&
-          System.nanoTime() < deadline)
-        Thread.sleep(50)
-      recs.sum()
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
+  private def shuffleRecordsWritten(df: DataFrame): Long =
+    graft.StageStats.measure(spark.sparkContext, s"shuffle-pin-${System.nanoTime()}")(
+      df.write.format("noop").mode("overwrite").save())._2.shuffleRecords.get()
 
   test("sessionizeBucketed: event log shuffles ONCE — on (user, bucket); carry join broadcast") {
     val ev = events.select(col("event_id"), col("user_id"), col("ts"))
@@ -379,5 +350,18 @@ class PlanShapeSpec extends SparkSuite {
     val p = plan(TextAnalysis.repetitionReport(docs, "doc_id", "text"))
     val n = countOccurrences(p, "regexp_extract_all")
     assert(n === 1, s"expected exactly 1 regexp_extract_all, got $n:\n$p")
+  }
+
+  test("ivfTopK: the executed plan does not grow with nlist") {
+    // centroids ride one broadcast and the per-row argmin is a single
+    // NearestCellsExpr call whatever nlist is; a literal-centroid
+    // formulation would grow the plan linearly in nlist
+    val embs = graft.queries.Fixtures.table(spark, sf("sf0.001"), "embeddings")
+    val q = embs.where(col("vec_id") % 100 === 0)
+    def planLen(nlist: Int): Int =
+      plan(Similarity.ivfTopK(embs, q, "vec_id", "embedding", 10, nlist = nlist, nprobe = 4)).length
+    val (p16, p256) = (planLen(16), planLen(256))
+    assert(math.abs(p256 - p16) <= 0.1 * p16,
+      s"plan length nlist=16: $p16 chars, nlist=256: $p256 chars")
   }
 }
