@@ -18,8 +18,9 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *  - every stage its job group ran, with tasks, max/mean task ms, skew
   *    and shuffle records + bytes written ([[StageStats]]);
   *  - `target/plans/<query>.txt`: `explain("formatted")` of the built
-  *    frame, the file the `plans/<tag>/<query>_before.txt` and
-  *    `_after.txt` record is copied from.
+  *    frame with its per-JVM counters masked ([[masked]]), the file the
+  *    `plans/<tag>/<query>_before.txt` and `_after.txt` record is copied
+  *    from.
   *
   * Usage: runMain graft.Profile [query...]  (none = every contract query;
   * SPARK_GRAFT_SF_DIR and SPARK_GRAFT_CPUS as for Bench)
@@ -75,8 +76,8 @@ object Profile {
         val df = SparkEntry.queries(name)(spark, sfDir)
         val build = (System.nanoTime() - t0) / 1e9
         Files.createDirectories(Paths.get(planDir))
-        Files.write(Paths.get(planDir, s"$name.txt"), df.queryExecution
-          .explainString(ExplainMode.fromString("formatted")).getBytes("UTF-8"))
+        Files.write(Paths.get(planDir, s"$name.txt"), masked(df.queryExecution
+          .explainString(ExplainMode.fromString("formatted"))).getBytes("UTF-8"))
         (build, Bench.seconds(Bench.noop(df)))
       }
       // the drain inside measure also delivered the write's plan event
@@ -85,6 +86,15 @@ object Profile {
       Report(build, run, exchanges, reused, stats)
     } finally spark.listenerManager.unregister(onPlan)
   }
+
+  /** `plan` with its per-JVM counters (expression ids, plan ids, RDD
+    * ids, lambda class ids) and identity hashes (binary literals,
+    * lambdas) masked, so an unchanged plan writes the same file in every
+    * run and a before/after diff shows only real changes. */
+  private[graft] def masked(plan: String): String =
+    plan.replaceAll("#\\d+", "#").replaceAll("plan_id=\\d+", "plan_id=")
+      .replaceAll("RDD\\[\\d+]", "RDD[]").replaceAll("\\[B@\\p{XDigit}+", "[B@")
+      .replaceAll("Lambda\\$\\d+/0x\\p{XDigit}+@\\p{XDigit}+", "Lambda")
 
   /** (shuffle exchanges, reused exchanges or stages) in a plan's tree
     * string. Shuffles match on tree prefixes only, so one nested under a

@@ -902,10 +902,10 @@ object Dedup {
       .unionByName(IndexMarker.capRow(corpus.sparkSession))
   }
 
-  /** The band family's (key, rid) removal rows — the pre-aggregation
-    * half of [[bandIndexKv]]'s key kernel, used by [[bandIndexDelete]]
-    * so a mass takedown never packs a per-bucket member array (the
-    * [[IndexDelete.publishRemoval]] row contract). */
+  /** The band family's (key, rid) rows — the pre-aggregation half of
+    * [[bandIndexKv]]'s key kernel, so a mass takedown never packs a
+    * per-bucket member array (the [[IndexDelete.publishRemoval]] row
+    * contract). */
   private def bandKeyRows(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     import graft.functions.{composite_key, int_be, long_be}
     lshBands(minHashSignatures(wordShingles(docs, idCol, textCol)))
@@ -918,228 +918,32 @@ object Dedup {
   val BandIndexType = "lsh-band"
 
   /**
-   * Incremental growth of a PUBLISHED [[bandIndexKv]] domain — the
-   * missing half of the updater cycle: after a delta is deduped against
-   * the index ([[dedupAgainstIndex]]), its survivors join the corpus,
-   * and THIS folds their band keys in so tomorrow's delta probes them
-   * too. Affected buckets merge by id (string-sorted — the index's own
-   * canonical form; re-adding an indexed id is idempotent), untouched
-   * buckets copy-forward. Work is O(delta + affected bucket values).
-   *
-   * The hot-bucket cap is preserved ACROSS upserts via
-   * [[graft.core.IndexTombstone]] (the BM25 stop-term precedent): a
-   * bucket the publish tombstoned never enters the merge (it stays
-   * tombstoned — a rebuild on corpus + delta would count past the cap
-   * and tombstone it again); the delta itself builds AT the cap, so a
-   * delta-hot bucket arrives as a tombstone and passes straight through
-   * (the union count is at least the delta's — a rebuild tombstones it
-   * too, and the member list never packs into one value cell); and a
-   * live merge crossing `maxBucket` WRITES the tombstone instead of the
-   * member list — upsert == union-rebuild therefore stays byte-identical
-   * on BOTH sides of the cap boundary. Recall accounting for what got
-   * dropped is [[oversizedLshBuckets]] at build time.
+   * The lifecycle of a PUBLISHED [[bandIndexKv]] domain ([[IndexFamily]]):
+   * after a delta is deduped against the index ([[dedupAgainstIndex]]),
+   * `upsert` folds its survivors' band keys in so tomorrow's delta probes
+   * them too; `delete` takes docs down by their text AS INDEXED;
+   * `update` does both in one version; `idAudit` / `removalAudit` audit
+   * drift and takedowns. `maxBucket` must be the build's cap. Recall
+   * accounting for cap-dropped buckets is [[oversizedLshBuckets]] at
+   * build time.
    */
+  def bandIndex(
+      idCol: String,
+      textCol: String,
+      maxBucket: Int = LshBuckets.MaxBucket): IndexFamily = {
+    val rows = (docs: DataFrame) => bandKeyRows(docs, idCol, textCol)
+    new IndexFamily("band", BandIndexType, idCol, maxBucket,
+      (df, cap) => bandIndexKv(df, idCol, textCol, maxBucket = cap), rows, rows)
+  }
+
+  /** `bandIndex(idCol, textCol).upsert(index, delta, newVersion)`. */
   def bandIndexUpsert(
       index: graft.store.DomainStore,
       delta: DataFrame,
       idCol: String,
       textCol: String,
-      newVersion: Long,
-      maxBucket: Int = LshBuckets.MaxBucket,
-      // `linked = true`: untouched shards ride `_links.json` instead of
-      // copy-forward — the O(delta) publish mode the daily-growth cycle
-      // needs at the 64Ki-shard regime (same trade as the deletes)
-      linked: Boolean = false): Unit = {
-    val spark = delta.sparkSession
-    import graft.functions.bytes_utf8
-    IndexMarker.require(index, spark, BandIndexType, "bandIndexUpsert", "bandIndexKv")
-    // tombstone-era gate: growing a publish whose build dropped buckets
-    // WITHOUT tombstones would silently resurrect them (IndexTombstone
-    // MIGRATION caveat) — refuse legacy publishes loud
-    IndexMarker.requireTombstoneCap(index, spark, "bandIndexUpsert", "bandIndexKv")
-    // the m:index-type marker row the build appends must NOT enter the
-    // bucket merge (its value would be treated as a member-id CSV —
-    // byte-stable only while marker values stay comma-free); it reaches
-    // the new version untouched through upsert's anti-join carry.
-    // The delta builds at the REAL cap: a delta bucket past maxBucket
-    // arrives as a tombstone (its member list never packs into one value
-    // cell — a 150M-doc mirrored-crawl bucket would otherwise build a
-    // multi-GB CSV just for the cap check to discard it) and the merge
-    // below writes the tombstone straight through.
-    val additions = bandIndexKv(delta, idCol, textCol, maxBucket = maxBucket)
-      .where(col("key") =!= lit(IndexMarker.Key))
-      .where(col("key") =!= lit(IndexMarker.CapKey))
-      .select(col("key"), bytes_utf8(col("value")).as("add"))
-      .persist()
-    val current = index
-      .multiGet(additions.select(col("key")), includeMisses = true)
-      .select(col("key"), bytes_utf8(col("value")).as("cur"))
-    val curIds = when(coalesce(col("cur"), lit("")) === "", array().cast("array<string>"))
-      .otherwise(split(col("cur"), ","))
-    // a tombstoned bucket stays tombstoned: the key never enters the
-    // merge (no write at all — the tombstone carries forward untouched),
-    // exactly what a union rebuild would republish for it
-    val mergedIds = array_sort(array_distinct(concat(curIds, split(col("add"), ","))))
-    val merged = additions.join(current, Seq("key"))
-      .where(coalesce(col("cur"), lit("")) =!= lit(graft.core.IndexTombstone.Value))
-      .select(col("key"),
-        graft.functions.utf8_bytes(
-          // a delta-side tombstone or a merge crossing the cap writes
-          // the tombstone the rebuild would (the union count is at
-          // least the larger side's — byte-identity across the cap
-          // boundary either way)
-          when(col("add") === lit(graft.core.IndexTombstone.Value),
-            lit(graft.core.IndexTombstone.Value))
-            .when(size(mergedIds) <= maxBucket, concat_ws(",", mergedIds))
-            .otherwise(lit(graft.core.IndexTombstone.Value)))
-          .as("value"))
-    try index.upsert(spark, merged, newVersion, linked = linked)
-    finally additions.unpersist()
-  }
-
-  /**
-   * Combined growth + takedown of a PUBLISHED [[bandIndexKv]] domain in
-   * ONE version — the real updater-cycle batch shape (a micro-batch
-   * carries the day's accepts AND its removal requests; publishing them
-   * as delete-then-upsert exposes an intermediate version and pays two
-   * copy-forward/link publishes). Per affected bucket the final
-   * membership is exactly what a rebuild on (corpus ∪ added \ removed)
-   * would count: `(current ∪ additions) \ removals`, canonically
-   * sorted, with the cap semantics of [[bandIndexUpsert]] — a
-   * cur-tombstoned bucket CARRIES (membership unknown; rebuild to
-   * recount), an additions-side tombstone or a merge crossing
-   * `maxBucket` WRITES the tombstone, an emptied bucket lands on the
-   * delete side of one [[graft.store.DomainStore.patch]]. An id on BOTH
-   * sides has no defined final state and fails loud (pass it on the
-   * side you mean). `bandIndexUpdate(added, ∅)` is byte-identical to
-   * [[bandIndexUpsert]] and `bandIndexUpdate(∅, removed)` to
-   * [[bandIndexDelete]] (spec-pinned — the three merges stay in
-   * lockstep). Work is O(batch + affected buckets), never O(index);
-   * per-key buffers are bounded by 2× the publish cap (current and
-   * additions each arrive capped — the [[IndexDelete.publishRemoval]]
-   * re-collect precedent).
-   *
-   * Deliberate fork, not an oversight: [[bandIndexUpsert]] could be a
-   * thin wrapper over `bandIndexUpdate(delta, ∅)` (the lockstep pin
-   * proves byte-identity), but its in-place string merge pays NO
-   * explode+groupBy shuffle — the grow streams' per-trigger hot path —
-   * while this merge must re-aggregate to subtract removals. The
-   * lockstep spec is the guard that keeps the two merges agreeing; a
-   * cap-semantics change must touch both (and the spec will say so).
-   */
-  def bandIndexUpdate(
-      index: graft.store.DomainStore,
-      added: DataFrame,
-      removed: DataFrame,
-      idCol: String,
-      textCol: String,
-      newVersion: Long,
-      maxBucket: Int = LshBuckets.MaxBucket,
-      linked: Boolean = false): Unit = {
-    val spark = added.sparkSession
-    import graft.functions.bytes_utf8
-    IndexDelete.requireIntegralId(added, idCol, "bandIndexUpdate")
-    IndexDelete.requireIntegralId(removed, idCol, "bandIndexUpdate")
-    IndexMarker.require(index, spark, BandIndexType, "bandIndexUpdate", "bandIndexKv")
-    IndexMarker.requireTombstoneCap(index, spark, "bandIndexUpdate", "bandIndexKv")
-    // ambiguous membership fails loud — bounded probe, never a full
-    // materialization (the limit(1) pattern)
-    IndexDelete.requireDisjointUpdate(added, removed, idCol, "bandIndexUpdate")
-    // additions build AT the cap (a delta-hot bucket arrives as a
-    // tombstone, never a multi-GB CSV); removals are (key, id) ROWS; the
-    // merge itself is the shared engine (ONE definition across the
-    // band/fp/phash/sem updates)
-    IndexDelete.publishUpdate(
-      index,
-      bandIndexKv(added, idCol, textCol, maxBucket = maxBucket)
-        .where(col("key") =!= lit(IndexMarker.Key))
-        .where(col("key") =!= lit(IndexMarker.CapKey))
-        .select(col("key"), bytes_utf8(col("value")).as("add")),
-      bandKeyRows(removed, idCol, textCol),
-      newVersion, maxBucket, "bandIndexUpdate", "bandIndexKv", linked)
-  }
-
-  /**
-   * Takedown from a PUBLISHED [[bandIndexKv]] domain: remove `removed`
-   * docs' ids from every band bucket their text maps to, publishing ONE
-   * new version (shrunken buckets upserted, emptied buckets absent —
-   * [[graft.store.DomainStore.patch]]). CONTENT-ADDRESSED like the probe:
-   * pass the same (id, text) rows that were indexed — the bucket keys are
-   * re-derived from the text, so a drifted text leaves stale entries in
-   * unprobed buckets — [[bandIndexIdAudit]] detects them; rebuild with
-   * [[bandIndexKv]] when content is gone or untrusted. Removing a
-   * never-indexed doc is a no-op. Work is O(removed + affected
-   * buckets), never O(index).
-   */
-  def bandIndexDelete(
-      index: graft.store.DomainStore,
-      removed: DataFrame,
-      idCol: String,
-      textCol: String,
-      newVersion: Long,
-      linked: Boolean = false): Unit = {
-    val spark = removed.sparkSession
-    IndexDelete.requireIntegralId(removed, idCol, "bandIndexDelete")
-    IndexMarker.require(index, spark, BandIndexType, "bandIndexDelete", "bandIndexKv")
-    // removal rows come straight from the band kernel — never a built
-    // index frame: a mass takedown sharing one hot band must stay (key,
-    // id) ROWS end to end (IndexDelete.publishRemoval's contract), not a
-    // collected member array
-    IndexDelete.publishRemoval(
-      index, bandKeyRows(removed, idCol, textCol), newVersion, linked = linked)
-  }
-
-  /**
-   * Stale-entry audit of a PUBLISHED [[bandIndexKv]] domain against the
-   * corpus of record — the detector for the content-drift caveat on
-   * [[bandIndexDelete]]: a takedown (or re-ingest) whose text drifted
-   * from what the build indexed leaves the id in buckets the delete
-   * never probed, invisible to every point probe and believing itself
-   * complete. Re-derives every (bucket, id) `corpus` should occupy with
-   * the build's own band kernel and full-outers the exploded index
-   * ([[IndexDelete.idAudit]]): `stale` rows are entries a
-   * current-content takedown would MISS (delete them with the content
-   * as indexed, or rebuild); `unindexed` rows are members a
-   * current-content probe would miss. Tombstoned buckets are excluded
-   * both ways (cap drops are semantics, not drift). Empty = consistent.
-   * O(index + corpus) — the batch audit before trusting a mass
-   * takedown, not a per-delta probe.
-   */
-  def bandIndexIdAudit(
-      index: graft.store.DomainStore,
-      corpus: DataFrame,
-      idCol: String,
-      textCol: String,
-      // > 1: the deterministic 1/sampleMod id-hash sweep — detects drift
-      // classes between full audits, can NOT prove takedown completeness
-      // (IndexDelete.idAudit's contract)
-      sampleMod: Long = 1L): DataFrame = {
-    IndexDelete.requireIntegralId(corpus, idCol, "bandIndexIdAudit")
-    IndexMarker.require(
-      index, corpus.sparkSession, BandIndexType, "bandIndexIdAudit", "bandIndexKv")
-    IndexDelete.idAudit(index, bandKeyRows(corpus, idCol, textCol), sampleMod = sampleMod)
-  }
-
-  /**
-   * Targeted takedown-certification of a PUBLISHED [[bandIndexKv]]
-   * domain ([[IndexDelete.removalAudit]] on the band kernel): pass the
-   * SAME (id, text) rows a [[bandIndexDelete]] consumed and get back
-   * every band entry still naming a removed id (`present` = the
-   * takedown missed it; `tombstoned` = the bucket's membership is
-   * cap-unknown, certify by rebuild). O(removed + affected buckets) —
-   * the post-takedown check; the full [[bandIndexIdAudit]] stays the
-   * drift fsck.
-   */
-  def bandIndexRemovalAudit(
-      index: graft.store.DomainStore,
-      removed: DataFrame,
-      idCol: String,
-      textCol: String): DataFrame = {
-    IndexDelete.requireIntegralId(removed, idCol, "bandIndexRemovalAudit")
-    IndexMarker.require(index, removed.sparkSession, BandIndexType,
-      "bandIndexRemovalAudit", "bandIndexKv")
-    IndexDelete.removalAudit(index, bandKeyRows(removed, idCol, textCol))
-  }
+      newVersion: Long): Unit =
+    bandIndex(idCol, textCol).upsert(index, delta, newVersion)
 
   /**
    * Dedup `incoming` docs against a PUBLISHED [[bandIndexKv]] domain:
@@ -1308,8 +1112,8 @@ object Dedup {
       .unionByName(IndexMarker.capRow(corpus.sparkSession))
   }
 
-  /** The fingerprint family's (key, rid) removal rows — the
-    * pre-aggregation half of [[fpIndexKv]]'s key kernel
+  /** The fingerprint family's (key, rid) rows — the pre-aggregation
+    * half of [[fpIndexKv]]'s key kernel
     * (the [[IndexDelete.publishRemoval]] row contract). */
   private def fpKeyRows(
       docs: DataFrame,
@@ -1321,25 +1125,25 @@ object Dedup {
     anchorOccurrences(docs, idCol, textCol, minLen, window, modulus)
       .select(unhex(col("fp")).as("key"), col("id").cast("string").as("rid"))
 
-  /** [[fpKeyRows]] as a caller-ownable frame — for a caller that must pay
-    * the anchor derivation ONCE and share the rows between a takedown and
-    * its certification ([[fpIndexDeleteRows]] + [[fpIndexRemovalAuditRows]];
-    * r16 verdict item 3 — the audit otherwise re-anchors the very set the
-    * takedown just derived, ~0.7× the takedown's bill a second time).
-    * MUST be called with the build's minLen/window/modulus (different
-    * anchor geometry derives different keys — the takedown would silently
-    * no-op). Output: (key binary, rid string), duplicates possible (every
-    * consumer dedupes); anchoring is per-doc, so filtering these rows by
-    * rid is equivalent to deriving from the filtered docs. */
-  def fpIndexKeyRows(
-      docs: DataFrame,
+  /**
+   * The lifecycle of a PUBLISHED [[fpIndexKv]] domain ([[IndexFamily]]),
+   * at the build's anchor geometry (`minLen`/`window`/`modulus` define
+   * the key bytes, so the descriptor carries them into every op). A
+   * boilerplate fingerprint shared by 100M removed docs is the design
+   * point of a takedown: removal stays (key, id) rows end to end.
+   * `keyRows` lets a caller pay the anchor derivation once and share it
+   * between `deleteRows` and `removalAuditRows`.
+   */
+  def fpIndex(
       idCol: String,
       textCol: String,
       minLen: Int = 64,
       window: Int = 8,
-      modulus: Int = 16): DataFrame = {
-    IndexDelete.requireIntegralId(docs, idCol, "fpIndexKeyRows")
-    fpKeyRows(docs, idCol, textCol, minLen, window, modulus)
+      modulus: Int = 16,
+      maxBucket: Int = LshBuckets.MaxBucket): IndexFamily = {
+    val rows = (docs: DataFrame) => fpKeyRows(docs, idCol, textCol, minLen, window, modulus)
+    new IndexFamily("fp", SpanIndexType, idCol, maxBucket,
+      (df, cap) => fpIndexKv(df, idCol, textCol, minLen, window, modulus, cap), rows, rows)
   }
 
   /**
@@ -1399,200 +1203,5 @@ object Dedup {
         "incoming and corpus sides — id spaces must be disjoint (pairs are " +
         "oriented incoming -> corpus)")
     cand
-  }
-
-  /**
-   * Incremental growth of a PUBLISHED [[fpIndexKv]] domain — fold a
-   * delta's anchored fingerprints in so tomorrow's probe sees today's
-   * accepts (the updater cycle every index family closes). Affected
-   * fingerprints merge by string-sorted id union (re-adding an indexed
-   * id is idempotent); untouched keys copy-forward (or link, under a
-   * linked-publish policy). Cap semantics ride
-   * [[graft.core.IndexTombstone]]: a tombstoned fingerprint stays
-   * dropped (never enters the merge), and a merge crossing `maxBucket`
-   * writes the tombstone a rebuild would — byte-identical to a union
-   * rebuild on BOTH sides of the cap boundary, the bandIndexUpsert
-   * contract.
-   */
-  def fpIndexUpsert(
-      index: graft.store.DomainStore,
-      delta: DataFrame,
-      idCol: String,
-      textCol: String,
-      newVersion: Long,
-      minLen: Int = 64,
-      window: Int = 8,
-      modulus: Int = 16,
-      maxBucket: Int = LshBuckets.MaxBucket,
-      linked: Boolean = false): Unit = {
-    val spark = delta.sparkSession
-    import graft.functions.bytes_utf8
-    IndexMarker.require(index, spark, SpanIndexType, "fpIndexUpsert", "fpIndexKv")
-    IndexMarker.requireTombstoneCap(index, spark, "fpIndexUpsert", "fpIndexKv")
-    // delta builds at the REAL cap (bandIndexUpsert's rationale: a hot
-    // delta fingerprint arrives as a tombstone, never a giant value cell)
-    val additions = fpIndexKv(delta, idCol, textCol, minLen, window, modulus,
-        maxBucket = maxBucket)
-      .where(col("key") =!= lit(IndexMarker.Key))
-      .where(col("key") =!= lit(IndexMarker.CapKey))
-      .select(col("key"), bytes_utf8(col("value")).as("add"))
-      .persist()
-    val current = index
-      .multiGet(additions.select(col("key")), includeMisses = true)
-      .select(col("key"), bytes_utf8(col("value")).as("cur"))
-    val curIds = when(coalesce(col("cur"), lit("")) === "", array().cast("array<string>"))
-      .otherwise(split(col("cur"), ","))
-    // tombstoned fingerprints stay dropped; a delta-side tombstone or a
-    // cap-crossing merge writes the tombstone a rebuild would
-    val mergedIds = array_sort(array_distinct(concat(curIds, split(col("add"), ","))))
-    val merged = additions.join(current, Seq("key"))
-      .where(coalesce(col("cur"), lit("")) =!= lit(graft.core.IndexTombstone.Value))
-      .select(col("key"),
-        graft.functions.utf8_bytes(
-          when(col("add") === lit(graft.core.IndexTombstone.Value),
-            lit(graft.core.IndexTombstone.Value))
-            .when(size(mergedIds) <= maxBucket, concat_ws(",", mergedIds))
-            .otherwise(lit(graft.core.IndexTombstone.Value)))
-          .as("value"))
-    try index.upsert(spark, merged, newVersion, linked = linked)
-    finally additions.unpersist()
-  }
-
-  /**
-   * Takedown from a PUBLISHED [[fpIndexKv]] domain: content-addressed
-   * like every family's delete — the removed docs' fingerprint keys are
-   * re-derived with the build kernel, shrunken fingerprints upserted,
-   * emptied ones absent, ONE patch version. O(removed + affected keys).
-   * Drifted text leaves stale entries in unprobed keys —
-   * [[fpIndexIdAudit]] detects them.
-   */
-  def fpIndexDelete(
-      index: graft.store.DomainStore,
-      removed: DataFrame,
-      idCol: String,
-      textCol: String,
-      newVersion: Long,
-      minLen: Int = 64,
-      window: Int = 8,
-      modulus: Int = 16,
-      linked: Boolean = false): Unit = {
-    IndexDelete.requireIntegralId(removed, idCol, "fpIndexDelete")
-    // (key, id) rows straight from the anchor kernel — a boilerplate
-    // fingerprint shared by 100M removed docs is the DESIGN POINT of a
-    // takedown, and must never pack one aggregation buffer
-    fpIndexDeleteRows(
-      index, fpKeyRows(removed, idCol, textCol, minLen, window, modulus), newVersion,
-      linked = linked)
-  }
-
-  /** [[fpIndexDelete]] on PRE-DERIVED (key, rid) rows — pass
-    * [[fpIndexKeyRows]] output (with the build's geometry) so one anchor
-    * derivation can serve both the takedown and its certification. */
-  def fpIndexDeleteRows(
-      index: graft.store.DomainStore,
-      removalRows: DataFrame,
-      newVersion: Long,
-      linked: Boolean = false): Unit = {
-    IndexMarker.require(
-      index, removalRows.sparkSession, SpanIndexType, "fpIndexDelete", "fpIndexKv")
-    IndexDelete.publishRemoval(index, removalRows, newVersion, linked = linked)
-  }
-
-  /**
-   * Stale-entry audit of a PUBLISHED [[fpIndexKv]] domain against the
-   * corpus of record — [[bandIndexIdAudit]]'s contract on the anchored
-   * fingerprint kernel (must be called with the BUILD's minLen/window/
-   * modulus: a different anchor parameterization derives different keys
-   * and reads as wholesale drift).
-   */
-  def fpIndexIdAudit(
-      index: graft.store.DomainStore,
-      corpus: DataFrame,
-      idCol: String,
-      textCol: String,
-      minLen: Int = 64,
-      window: Int = 8,
-      modulus: Int = 16,
-      // > 1: the deterministic 1/sampleMod id-hash sweep — detects drift
-      // classes between full audits, can NOT prove takedown completeness
-      // (IndexDelete.idAudit's contract)
-      sampleMod: Long = 1L): DataFrame = {
-    IndexDelete.requireIntegralId(corpus, idCol, "fpIndexIdAudit")
-    IndexMarker.require(
-      index, corpus.sparkSession, SpanIndexType, "fpIndexIdAudit", "fpIndexKv")
-    IndexDelete.idAudit(index, fpKeyRows(corpus, idCol, textCol, minLen, window, modulus),
-      sampleMod = sampleMod)
-  }
-
-  /**
-   * Targeted takedown-certification of a PUBLISHED [[fpIndexKv]] domain
-   * ([[IndexDelete.removalAudit]] on the anchored fingerprint kernel —
-   * must be called with the BUILD's minLen/window/modulus): every
-   * fingerprint entry still naming a removed id reports `present`, a
-   * removal mapping to a cap-tombstoned fingerprint reports
-   * `tombstoned` (membership unknown — certify by rebuild). Empty =
-   * the takedown is complete for this removal set, at
-   * O(removed + affected keys) instead of [[fpIndexIdAudit]]'s fsck.
-   */
-  def fpIndexRemovalAudit(
-      index: graft.store.DomainStore,
-      removed: DataFrame,
-      idCol: String,
-      textCol: String,
-      minLen: Int = 64,
-      window: Int = 8,
-      modulus: Int = 16): DataFrame = {
-    IndexDelete.requireIntegralId(removed, idCol, "fpIndexRemovalAudit")
-    fpIndexRemovalAuditRows(
-      index, fpKeyRows(removed, idCol, textCol, minLen, window, modulus))
-  }
-
-  /** [[fpIndexRemovalAudit]] on PRE-DERIVED (key, rid) rows — pass
-    * [[fpIndexKeyRows]] output (with the build's geometry) so one anchor
-    * derivation can serve both the takedown and its certification. */
-  def fpIndexRemovalAuditRows(
-      index: graft.store.DomainStore,
-      removalRows: DataFrame): DataFrame = {
-    IndexMarker.require(index, removalRows.sparkSession, SpanIndexType,
-      "fpIndexRemovalAudit", "fpIndexKv")
-    IndexDelete.removalAudit(index, removalRows)
-  }
-
-  /**
-   * The FINGERPRINT twin of [[bandIndexUpdate]] — combined growth +
-   * takedown of a published [[fpIndexKv]] domain in ONE version, the
-   * shared [[IndexDelete.publishUpdate]] merge on the anchor kernel.
-   * Geometry params MUST be the build's (they define the key bytes);
-   * same contract: final membership == rebuild on corpus ∪ added \
-   * removed (modulo the cur-tombstone carve-out), an id on both sides
-   * fails loud.
-   */
-  def fpIndexUpdate(
-      index: graft.store.DomainStore,
-      added: DataFrame,
-      removed: DataFrame,
-      idCol: String,
-      textCol: String,
-      newVersion: Long,
-      minLen: Int = 64,
-      window: Int = 8,
-      modulus: Int = 16,
-      maxBucket: Int = LshBuckets.MaxBucket,
-      linked: Boolean = false): Unit = {
-    val spark = added.sparkSession
-    import graft.functions.bytes_utf8
-    IndexDelete.requireIntegralId(added, idCol, "fpIndexUpdate")
-    IndexDelete.requireIntegralId(removed, idCol, "fpIndexUpdate")
-    IndexMarker.require(index, spark, SpanIndexType, "fpIndexUpdate", "fpIndexKv")
-    IndexMarker.requireTombstoneCap(index, spark, "fpIndexUpdate", "fpIndexKv")
-    IndexDelete.requireDisjointUpdate(added, removed, idCol, "fpIndexUpdate")
-    IndexDelete.publishUpdate(
-      index,
-      fpIndexKv(added, idCol, textCol, minLen, window, modulus, maxBucket)
-        .where(col("key") =!= lit(IndexMarker.Key))
-        .where(col("key") =!= lit(IndexMarker.CapKey))
-        .select(col("key"), bytes_utf8(col("value")).as("add")),
-      fpKeyRows(removed, idCol, textCol, minLen, window, modulus),
-      newVersion, maxBucket, "fpIndexUpdate", "fpIndexKv", linked)
   }
 }

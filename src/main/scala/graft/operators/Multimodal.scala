@@ -296,20 +296,6 @@ object Multimodal {
       .select(col("id_a"), col("id_b"), col("hamming"))
   }
 
-  /** Ids round-trip through index values as decimal strings (`id:phash`
-    * entries) and back through `cast("long")` — a string id '007' would
-    * silently split into two id spaces ('007' probing, 7 unpacked).
-    * Fail loud upfront, the `Dedup.dedupAgainstIndex` contract. */
-  private def requireIntegralMediaId(df: DataFrame, op: String): Unit = {
-    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
-    df.schema("media_id").dataType match {
-      case ByteType | ShortType | IntegerType | LongType => ()
-      case other => throw new IllegalArgumentException(
-        s"$op: media_id must be integral (ids travel through index values " +
-          s"as decimal strings), got ${other.simpleString}")
-    }
-  }
-
   /** The index families' ONE key/entry grammar (CLAUDE.md: two record
     * classes sharing a key scheme must share the key-building
     * expression) — build, removal rows, and the content audit all
@@ -355,7 +341,7 @@ object Multimodal {
       hashes: DataFrame,
       maxBucket: Int = LshBuckets.MaxBucket): DataFrame = {
     import graft.functions.utf8_bytes
-    requireIntegralMediaId(hashes, "phashIndexKv")
+    IndexDelete.requireIntegralId(hashes, "media_id", "phashIndexKv")
     // one capped aggregation pass (LshBuckets.boundedMembers); the
     // family's canonical order is the full `id:phash` entry string
     // (phashEntry — the ONE grammar definition the audit shares)
@@ -410,7 +396,7 @@ object Multimodal {
       s"maxHamming $maxHamming outside [0, $PhashBands): the $PhashBands-band " +
         "pigeonhole guarantees complete recall only below the band count — " +
         "re-band (more, narrower bands) instead of silently missing pairs")
-    requireIntegralMediaId(incoming, "phashDedupAgainstIndex")
+    IndexDelete.requireIntegralId(incoming, "media_id", "phashDedupAgainstIndex")
     IndexMarker.require(
       store, incoming.sparkSession, PhashIndexType, "phashDedupAgainstIndex", "phashIndexKv")
     val probes = phashBandBuckets(incoming).select(
@@ -444,201 +430,23 @@ object Multimodal {
   }
 
   /**
-   * Incremental growth of a PUBLISHED [[phashIndexKv]] domain — after a
-   * media delta is deduped against the index, its survivors join the
-   * corpus and THIS folds their band entries in so tomorrow's delta
-   * probes them too. Affected buckets merge by entry string (sorted —
-   * the index's canonical form; re-adding an indexed image is
-   * idempotent because `id:phash` entries are identical), untouched
-   * buckets copy-forward; work is O(delta + affected bucket values).
-   * Cap semantics ride [[graft.core.IndexTombstone]]
-   * (`Dedup.bandIndexUpsert`'s rationale): a tombstoned bucket stays
-   * dropped (never enters the merge) and a merge crossing `maxBucket`
-   * writes the tombstone a rebuild would — byte-identical to a full
-   * rebuild on both sides of the cap boundary.
+   * The lifecycle of a PUBLISHED [[phashIndexKv]] domain
+   * ([[IndexFamily]]), on the pigeonhole band kernel. Entries carry
+   * `id:phash`: `idAudit` compares the FULL entry (a re-hashed image
+   * whose old and new phash share a bucket reads stale + unindexed, since
+   * the stored payload is what the probe's hamming verify reads), while
+   * deletes and `removalAudit` match stored entries by id part, whatever
+   * their payload. An id re-ingested with a CHANGED phash fails loud in
+   * `upsert` and `update` wherever old and new share a bucket
+   * (guaranteed at hamming <= 3); change a phash by delete-then-upsert
+   * or a rebuild.
    */
-  def phashIndexUpsert(
-      index: graft.store.DomainStore,
-      deltaHashes: DataFrame,
-      newVersion: Long,
-      maxBucket: Int = LshBuckets.MaxBucket,
-      linked: Boolean = false): Unit = {
-    val spark = deltaHashes.sparkSession
-    import graft.functions.bytes_utf8
-    IndexMarker.require(index, spark, PhashIndexType, "phashIndexUpsert", "phashIndexKv")
-    IndexMarker.requireTombstoneCap(index, spark, "phashIndexUpsert", "phashIndexKv")
-    // marker row filtered from the merge (Dedup.bandIndexUpsert's
-    // rationale); it carries forward untouched via the anti-join.
-    // Delta builds at the REAL cap: a hot delta bucket arrives as a
-    // tombstone, never a giant value cell (bandIndexUpsert's rationale)
-    val additions = phashIndexKv(deltaHashes, maxBucket = maxBucket)
-      .where(col("key") =!= lit(IndexMarker.Key))
-      .where(col("key") =!= lit(IndexMarker.CapKey))
-      .select(col("key"), bytes_utf8(col("value")).as("add"))
-      .persist()
-    try {
-      val current = index
-        .multiGet(additions.select(col("key")), includeMisses = true)
-        .select(col("key"), bytes_utf8(col("value")).as("cur"))
-      val curEntries =
-        when(coalesce(col("cur"), lit("")) === "", array().cast("array<string>"))
-          .otherwise(split(col("cur"), ","))
-      // a tombstoned bucket stays tombstoned: the key never enters the
-      // merge (the tombstone carries forward untouched via the anti-join);
-      // a delta-side tombstone passes straight through as the tombstone a
-      // rebuild would write (the changed-phash check below is moot for it
-      // — a rebuild would drop the bucket unexamined too)
-      val merged = additions.join(current, Seq("key"))
-        .where(coalesce(col("cur"), lit("")) =!= lit(graft.core.IndexTombstone.Value))
-        .select(col("key"), col("add"),
-          array_sort(array_distinct(concat(curEntries, split(col("add"), ","))))
-            .as("entries"))
-        // an id re-ingested with a CHANGED phash is remove+add, which an
-        // upsert cannot express (the old entry's OTHER band buckets are
-        // unreachable from here) — and a stale id:phash entry would feed
-        // the probe's popcount verify WRONG data, a silent-miss class.
-        // Detectable exactly when old and new land in the same bucket
-        // (guaranteed for hamming <= 3 by the pigeonhole: at least one
-        // band is unchanged) AND that bucket's merge actually runs —
-        // a bucket the delta cap-tombstoned skips the merge unexamined
-        // (a rebuild would drop it unexamined too), so a changed phash
-        // whose ONLY unchanged band lands in a delta-hot bucket escapes
-        // this guard; the other three bands' buckets still catch any
-        // additional unchanged band, and the guard remains best-effort
-        // by construction (it never promised to see hamming > 3).
-        .select(col("key"), col("add"), col("entries"),
-          size(array_distinct(expr("transform(entries, e -> split(e, ':')[0])")))
-            .as("n_ids"))
-        .select(col("key"),
-          graft.functions.utf8_bytes(
-            when(col("add") === lit(graft.core.IndexTombstone.Value),
-              lit(graft.core.IndexTombstone.Value))
-              .when(col("n_ids") =!= size(col("entries")), raise_error(concat(
-                lit("phashIndexUpsert: an id was re-ingested with a CHANGED "),
-                lit("phash (old and new entries share a bucket) — an upsert has "),
-                lit("no tombstone for the old hash: re-band the corpus with "),
-                lit("phashIndexKv instead"))))
-              .when(size(col("entries")) <= maxBucket, concat_ws(",", col("entries")))
-              // a merge crossing the cap writes the tombstone a rebuild
-              // would (byte-identity across the cap boundary)
-              .otherwise(lit(graft.core.IndexTombstone.Value)))
-            .as("value"))
-      index.upsert(spark, merged, newVersion, linked = linked)
-    } finally additions.unpersist()
-  }
-
-  /**
-   * Takedown from a PUBLISHED [[phashIndexKv]] domain: remove the named
-   * media ids' `id:phash` entries from every band bucket their hash maps
-   * to, publishing ONE new version (shrunken buckets upserted, emptied
-   * buckets absent). Content-addressed — pass the same (media_id, phash)
-   * rows that were indexed; a re-hashed image whose phash changed maps
-   * to other buckets and no-ops there, leaving stale entries —
-   * [[phashIndexIdAudit]] detects them; rebuild with [[phashIndexKv]]
-   * when the indexed hashes are gone or untrusted. Work is
-   * O(removed + affected buckets).
-   */
-  def phashIndexDelete(
-      index: graft.store.DomainStore,
-      removedHashes: DataFrame,
-      newVersion: Long,
-      linked: Boolean = false): Unit = {
-    requireIntegralMediaId(removedHashes, "phashIndexDelete")
-    IndexMarker.require(
-      index, removedHashes.sparkSession, PhashIndexType, "phashIndexDelete", "phashIndexKv")
-    // (key, id) rows straight from the band kernel — a mass takedown of
-    // one replicated image (every row sharing its bands) must never pack
-    // a collected member array (IndexDelete.publishRemoval's contract)
-    IndexDelete.publishRemoval(
-      index, phashKeyRows(removedHashes), newVersion, linked = linked)
-  }
-
-  /**
-   * Stale-entry audit of a PUBLISHED [[phashIndexKv]] domain against the
-   * (media_id, phash) table of record — `Dedup.bandIndexIdAudit`'s
-   * contract on the pigeonhole band kernel. Compared at FULL `id:phash`
-   * entry granularity ([[IndexDelete.idAudit]]): a re-hashed image whose
-   * old and new phash share a band bucket reads as stale + unindexed
-   * there, not as clean — the stored payload is what the probe's hamming
-   * verify reads, so payload drift is drift.
-   */
-  def phashIndexIdAudit(
-      index: graft.store.DomainStore,
-      hashes: DataFrame,
-      // > 1: the deterministic 1/sampleMod id-hash sweep — detects drift
-      // classes between full audits, can NOT prove takedown completeness
-      // (IndexDelete.idAudit's contract)
-      sampleMod: Long = 1L): DataFrame = {
-    requireIntegralMediaId(hashes, "phashIndexIdAudit")
-    IndexMarker.require(
-      index, hashes.sparkSession, PhashIndexType, "phashIndexIdAudit", "phashIndexKv")
-    // expected rows carry the full entry string as the comparison unit
-    // — phashBucketKey/phashEntry are the build's own definitions, so
-    // the audit can never drift from the published grammar
-    IndexDelete.idAudit(index, phashBandBuckets(hashes).select(
-      phashBucketKey.as("key"), phashEntry.as("rid")), sampleMod = sampleMod)
-  }
-
-  /**
-   * Targeted takedown-certification of a PUBLISHED [[phashIndexKv]]
-   * domain ([[IndexDelete.removalAudit]] on the pigeonhole band kernel):
-   * pass the removed media's (media_id, phash) rows and get back every
-   * band entry still naming a removed id (`present`; the id JOIN is on
-   * the entry's id part, so it certifies membership regardless of
-   * payload — a payload-drifted survivor still reports) or mapping to a
-   * cap-tombstoned bucket (`tombstoned` — membership unknown, certify
-   * by rebuild). O(removed + affected buckets); [[phashIndexIdAudit]]
-   * stays the drift fsck.
-   */
-  def phashIndexRemovalAudit(
-      index: graft.store.DomainStore,
-      hashes: DataFrame): DataFrame = {
-    requireIntegralMediaId(hashes, "phashIndexRemovalAudit")
-    IndexMarker.require(index, hashes.sparkSession, PhashIndexType,
-      "phashIndexRemovalAudit", "phashIndexKv")
-    // removal rows carry the plain media_id as rid (the delete's own
-    // contract — phashKeyRows): the engine joins stored entries by id
-    // part, so `id:phash` payloads need not match the content in hand
-    IndexDelete.removalAudit(index, phashKeyRows(hashes))
-  }
-
-  /**
-   * The IMAGE twin of `Dedup.bandIndexUpdate` — combined growth +
-   * takedown of a published [[phashIndexKv]] domain in ONE version
-   * ([[IndexDelete.publishUpdate]] on the pigeonhole band kernel): adds
-   * carry (media_id, phash) as indexed, removals drop entries by id
-   * part. The engine's payload-uniqueness guard is LIVE here (not
-   * vacuous): an id present in the index re-added with a CHANGED phash
-   * fails loud wherever old and new share a bucket (guaranteed for
-   * hamming ≤ 3 — [[phashIndexUpsert]]'s re-ingest hazard) — and a
-   * same-id remove+re-add in one batch is refused by the clash gate
-   * (the removal joins by id part and would drop the NEW entry too):
-   * changed-phash re-ingest stays delete-then-upsert or a rebuild.
-   */
-  def phashIndexUpdate(
-      index: graft.store.DomainStore,
-      addedHashes: DataFrame,
-      removedHashes: DataFrame,
-      newVersion: Long,
-      maxBucket: Int = LshBuckets.MaxBucket,
-      linked: Boolean = false): Unit = {
-    val spark = addedHashes.sparkSession
-    import graft.functions.bytes_utf8
-    requireIntegralMediaId(addedHashes, "phashIndexUpdate")
-    requireIntegralMediaId(removedHashes, "phashIndexUpdate")
-    IndexMarker.require(index, spark, PhashIndexType, "phashIndexUpdate", "phashIndexKv")
-    IndexMarker.requireTombstoneCap(index, spark, "phashIndexUpdate", "phashIndexKv")
-    IndexDelete.requireDisjointUpdate(
-      addedHashes, removedHashes, "media_id", "phashIndexUpdate")
-    IndexDelete.publishUpdate(
-      index,
-      phashIndexKv(addedHashes, maxBucket = maxBucket)
-        .where(col("key") =!= lit(IndexMarker.Key))
-        .where(col("key") =!= lit(IndexMarker.CapKey))
-        .select(col("key"), bytes_utf8(col("value")).as("add")),
-      phashKeyRows(removedHashes),
-      newVersion, maxBucket, "phashIndexUpdate", "phashIndexKv", linked)
-  }
+  def phashIndex(maxBucket: Int = LshBuckets.MaxBucket): IndexFamily =
+    new IndexFamily("phash", PhashIndexType, "media_id", maxBucket,
+      (df, cap) => phashIndexKv(df, maxBucket = cap),
+      phashKeyRows,
+      hashes => phashBandBuckets(hashes).select(
+        phashBucketKey.as("key"), phashEntry.as("rid")))
 
   private def decodeImageBatch(batch: Seq[MediaRecord]): Seq[MediaFeatures] =
     batch.map { r =>

@@ -686,7 +686,7 @@ object Search {
   private val PostingsArrayType = "array<struct<doc_id:bigint,tf:bigint>>"
 
   /** Incremental growth of a PUBLISHED [[invertedIndexKv]] domain — the
-    * updater cycle for search (sibling of `Dedup.bandIndexUpsert` /
+    * updater cycle for search (sibling of [[IndexFamily.upsert]] /
     * `Similarity.ivfIndexUpsert`): new documents fold into the affected
     * postings, publish their lengths, and advance the corpus stats;
     * untouched terms copy-forward via the standard delta publish.
@@ -699,7 +699,7 @@ object Search {
     *    no partial postings list resurrects;
     *  - a merge that would CROSS the cap fails loud naming the rebuild
     *    (an upsert cannot drop a published `t:` key — same reasoning as
-    *    bandIndexUpsert's bucket cap);
+    *    the membership families' bucket cap);
     *  - internally duplicated delta ids trip upsert's key-repeat guard.
     *
     * Takedown: NOT supported incrementally — a removed doc's tf entries
@@ -708,8 +708,7 @@ object Search {
     * need exact decrement; the supported path is a rebuild via
     * [[invertedIndexKv]] on the corpus minus the removed docs (contrast the
     * dedup/ANN families, whose membership-only cells take
-    * `bandIndexDelete`/`semIndexDelete`/`phashIndexDelete`/
-    * `ivfIndexDelete`).
+    * [[IndexFamily.delete]] / `ivfIndexDelete`).
     *
     * Work is O(delta + affected postings): three bounded multiGets (term
     * keys ×2, the 1-row stats) plus the delta-sized upsert. */
@@ -731,7 +730,7 @@ object Search {
       wrongTypeHint = "positional domains take positionalIndexUpsert",
       noStatsHint = "not a search-index domain")
 
-    // SCOPED persist (the bandIndexUpsert pattern): the additions
+    // SCOPED persist (the IndexDelete.publishUpsert pattern): the additions
     // aggregate feeds the two current-record multiGets AND the merge —
     // without it the delta is re-tokenized and re-aggregated per
     // consumer (an expensive-source delta would be scanned ~4x per

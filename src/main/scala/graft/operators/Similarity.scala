@@ -1702,167 +1702,21 @@ object Similarity {
   }
 
   /**
-   * Incremental growth of a PUBLISHED [[semIndexKv]] domain: fold a
-   * delta's cell memberships in (string-sorted id merge — re-adding an
-   * indexed id is idempotent), untouched cells copy-forward. Cap
-   * semantics ride [[graft.core.IndexTombstone]]
-   * (`Dedup.bandIndexUpsert`'s rationale): a tombstoned cell stays
-   * dropped and a merge crossing `maxBucket` writes the tombstone a
-   * rebuild would — byte-identical to a union rebuild on both sides of
-   * the cap boundary (re-cluster at more planes to re-bound hot cells).
+   * The lifecycle of a PUBLISHED [[semIndexKv]] domain ([[IndexFamily]])
+   * at the build's `planes` (the seeded hyperplanes define the cell
+   * keys, so the descriptor carries them into every op). Zero-norm
+   * vectors were never indexed and derive no rows; a different-dim or
+   * drifted embedding maps to other cells and reads as a no-op, which
+   * `idAudit` detects. Re-cluster at more planes to re-bound hot cells.
    */
-  def semIndexUpsert(
-      index: graft.store.DomainStore,
-      delta: DataFrame,
-      idCol: String,
-      vecCol: String,
-      newVersion: Long,
-      planes: Int,
-      maxBucket: Int = LshBuckets.MaxBucket,
-      linked: Boolean = false): Unit = {
-    val spark = delta.sparkSession
-    import graft.functions.bytes_utf8
-    IndexMarker.require(index, spark, SemIndexType, "semIndexUpsert", "semIndexKv")
-    IndexMarker.requireTombstoneCap(index, spark, "semIndexUpsert", "semIndexKv")
-    IndexDelete.requireIntegralId(delta, idCol, "semIndexUpsert")
-    // marker row filtered from the merge (Dedup.bandIndexUpsert's
-    // rationale); it carries forward untouched via the anti-join.
-    // Delta builds at the REAL cap: a hot delta cell arrives as a
-    // tombstone, never a giant value cell (bandIndexUpsert's rationale)
-    val additions = semIndexKv(delta, idCol, vecCol, planes, maxBucket = maxBucket)
-      .where(col("key") =!= lit(IndexMarker.Key))
-      .where(col("key") =!= lit(IndexMarker.CapKey))
-      .select(col("key"), bytes_utf8(col("value")).as("add"))
-      .persist()
-    try {
-      val current = index
-        .multiGet(additions.select(col("key")), includeMisses = true)
-        .select(col("key"), bytes_utf8(col("value")).as("cur"))
-      val curIds =
-        when(coalesce(col("cur"), lit("")) === "", array().cast("array<string>"))
-          .otherwise(split(col("cur"), ","))
-      // tombstoned cells stay dropped; a delta-side tombstone or a
-      // cap-crossing merge writes the tombstone a rebuild would
-      val mergedIds = array_sort(array_distinct(concat(curIds, split(col("add"), ","))))
-      val merged = additions.join(current, Seq("key"))
-        .where(coalesce(col("cur"), lit("")) =!= lit(graft.core.IndexTombstone.Value))
-        .select(col("key"),
-          graft.functions.utf8_bytes(
-            when(col("add") === lit(graft.core.IndexTombstone.Value),
-              lit(graft.core.IndexTombstone.Value))
-              .when(size(mergedIds) <= maxBucket, concat_ws(",", mergedIds))
-              .otherwise(lit(graft.core.IndexTombstone.Value)))
-            .as("value"))
-      index.upsert(spark, merged, newVersion, linked = linked)
-    } finally additions.unpersist()
-  }
-
-  /**
-   * Takedown from a PUBLISHED [[semIndexKv]] domain: remove `removed`
-   * embeddings' ids from their hyperplane cells, publishing ONE new
-   * version (shrunken cells upserted, emptied cells absent). Content-
-   * addressed like the probe — pass the same (id, vector) rows that were
-   * indexed; a different-dim or drifted embedding maps to other cells
-   * and reads as a no-op, leaving the stale entries behind —
-   * [[semIndexIdAudit]] detects them; rebuild with [[semIndexKv]] when
-   * the indexed embeddings are gone or untrusted. Work is
-   * O(removed + affected cells).
-   */
-  def semIndexDelete(
-      index: graft.store.DomainStore,
-      removed: DataFrame,
+  def semIndex(
       idCol: String,
       vecCol: String,
       planes: Int,
-      newVersion: Long,
-      linked: Boolean = false): Unit = {
-    val spark = removed.sparkSession
-    IndexDelete.requireIntegralId(removed, idCol, "semIndexDelete")
-    IndexMarker.require(index, spark, SemIndexType, "semIndexDelete", "semIndexKv")
-    // (key, id) rows straight from the cell kernel — an identical-
-    // embedding cluster (one hot cell) must never pack a collected
-    // member array (IndexDelete.publishRemoval's contract)
-    IndexDelete.publishRemoval(
-      index, semKeyRows(removed, idCol, vecCol, planes), newVersion, linked = linked)
-  }
-
-  /**
-   * Stale-entry audit of a PUBLISHED [[semIndexKv]] domain against the
-   * embedding table of record — `Dedup.bandIndexIdAudit`'s contract on
-   * the seeded-hyperplane cell kernel (must be called with the build's
-   * `planes`; zero-norm vectors were never indexed and derive no
-   * expected rows, matching the build).
-   */
-  def semIndexIdAudit(
-      index: graft.store.DomainStore,
-      corpus: DataFrame,
-      idCol: String,
-      vecCol: String,
-      planes: Int,
-      // > 1: the deterministic 1/sampleMod id-hash sweep — detects drift
-      // classes between full audits, can NOT prove takedown completeness
-      // (IndexDelete.idAudit's contract)
-      sampleMod: Long = 1L): DataFrame = {
-    IndexDelete.requireIntegralId(corpus, idCol, "semIndexIdAudit")
-    IndexMarker.require(
-      index, corpus.sparkSession, SemIndexType, "semIndexIdAudit", "semIndexKv")
-    IndexDelete.idAudit(index, semKeyRows(corpus, idCol, vecCol, planes),
-      sampleMod = sampleMod)
-  }
-
-  /**
-   * Targeted takedown-certification of a PUBLISHED [[semIndexKv]] domain
-   * ([[IndexDelete.removalAudit]] on the hyperplane cell kernel — the
-   * build's `planes`): every cell entry still naming a removed id
-   * reports `present`, a removal mapping to a cap-tombstoned cell
-   * reports `tombstoned`. O(removed + affected cells);
-   * [[semIndexIdAudit]] stays the drift fsck.
-   */
-  def semIndexRemovalAudit(
-      index: graft.store.DomainStore,
-      removed: DataFrame,
-      idCol: String,
-      vecCol: String,
-      planes: Int): DataFrame = {
-    IndexDelete.requireIntegralId(removed, idCol, "semIndexRemovalAudit")
-    IndexMarker.require(index, removed.sparkSession, SemIndexType,
-      "semIndexRemovalAudit", "semIndexKv")
-    IndexDelete.removalAudit(index, semKeyRows(removed, idCol, vecCol, planes))
-  }
-
-  /**
-   * The EMBEDDING twin of `Dedup.bandIndexUpdate` — combined growth +
-   * takedown of a published [[semIndexKv]] domain in ONE version
-   * ([[IndexDelete.publishUpdate]] on the hyperplane cell kernel; must
-   * be the build's `planes`). Same contract: final membership == rebuild
-   * on corpus ∪ added \ removed (modulo the cur-tombstone carve-out),
-   * an id on both sides fails loud.
-   */
-  def semIndexUpdate(
-      index: graft.store.DomainStore,
-      added: DataFrame,
-      removed: DataFrame,
-      idCol: String,
-      vecCol: String,
-      planes: Int,
-      newVersion: Long,
-      maxBucket: Int = LshBuckets.MaxBucket,
-      linked: Boolean = false): Unit = {
-    val spark = added.sparkSession
-    import graft.functions.bytes_utf8
-    IndexDelete.requireIntegralId(added, idCol, "semIndexUpdate")
-    IndexDelete.requireIntegralId(removed, idCol, "semIndexUpdate")
-    IndexMarker.require(index, spark, SemIndexType, "semIndexUpdate", "semIndexKv")
-    IndexMarker.requireTombstoneCap(index, spark, "semIndexUpdate", "semIndexKv")
-    IndexDelete.requireDisjointUpdate(added, removed, idCol, "semIndexUpdate")
-    IndexDelete.publishUpdate(
-      index,
-      semIndexKv(added, idCol, vecCol, planes, maxBucket)
-        .where(col("key") =!= lit(IndexMarker.Key))
-        .where(col("key") =!= lit(IndexMarker.CapKey))
-        .select(col("key"), bytes_utf8(col("value")).as("add")),
-      semKeyRows(removed, idCol, vecCol, planes),
-      newVersion, maxBucket, "semIndexUpdate", "semIndexKv", linked)
+      maxBucket: Int = LshBuckets.MaxBucket): IndexFamily = {
+    val rows = (df: DataFrame) => semKeyRows(df, idCol, vecCol, planes)
+    new IndexFamily("sem", SemIndexType, idCol, maxBucket,
+      (df, cap) => semIndexKv(df, idCol, vecCol, planes, cap), rows, rows)
   }
 
   /**

@@ -175,10 +175,7 @@ object PipelineQueries {
       val store = spanIndexStore(s, dir)
       val record = Fixtures.table(s, dir, "documents").where(
         col("doc_id") % DeltaMod === 0 || col("doc_id") % AuditDropMod =!= 0)
-      Dedup.fpIndexIdAudit(store, record, "doc_id", "text",
-          minLen = DedupQueries.SubstringMinLen,
-          window = DedupQueries.SubstringWindow,
-          modulus = DedupQueries.SubstringModulus)
+      spanIndex.idAudit(store, record)
         .select(lower(hex(col("key"))).as("fp"),
           col("id").cast("long").as("id"), col("kind"))
     },
@@ -202,7 +199,7 @@ object PipelineQueries {
       // fixture's takedown filtered (one anchorOccurrences pass serves
       // both — r16 verdict item 3); same math as deriving from the audit
       // slice directly, since anchoring is per-doc
-      Dedup.fpIndexRemovalAuditRows(store, takedownKeyRows(s, dir))
+      spanIndex.removalAuditRows(store, takedownKeyRows(s, dir))
         .select(lower(hex(col("key"))).as("fp"),
           col("id").cast("long").as("id"), col("entry"), col("kind"))
     },
@@ -224,7 +221,7 @@ object PipelineQueries {
         s, Fixtures.table(s, dir, "documents")
           .where(col("doc_id") % DeltaMod === 0 || col("doc_id") % AuditDropMod =!= 0)
           .select(col("doc_id")))
-      Multimodal.phashIndexIdAudit(
+      Multimodal.phashIndex().idAudit(
           store,
           Multimodal.imageHashes(s, recordMedia).toDF()
             .select(col("media_id"), col("phash")))
@@ -444,18 +441,13 @@ object PipelineQueries {
       .select(col("query_id"), col("neighbor_id"), col("rank").cast("long").as("rank"))
   }
 
-  /** The BUILD half of pipeline_dedup_index: band the corpus and publish
-    * the index as a KV domain (memoized per sf by Fixtures, so inside one
-    * bench pass the probe half reuses it). Bloom sidecars are what make
-    * index probes cheap (band keys are overwhelmingly misses): without
-    * the indexer, mightContain is constantly true and the advertised
-    * zero-I/O miss path never runs. Exposed separately so Bench can
-    * attribute build vs probe time (VERDICT r3 task 7). */
-  /** The BUILD half of pipeline_span_index: publish the corpus's anchored
-    * fingerprints as a KV domain (bloom sidecars for the probe's misses,
-    * like every index fixture). The md5 fingerprints are SQL-replayable,
-    * so — unlike the band index — the publish keeps the documented
-    * cap-dropping default and the oracle replays the cap. */
+  /** The span fixtures' fingerprint family at the contract queries'
+    * anchor geometry: the fixture build and every later op use it. */
+  private val spanIndex = Dedup.fpIndex("doc_id", "text",
+    minLen = DedupQueries.SubstringMinLen,
+    window = DedupQueries.SubstringWindow,
+    modulus = DedupQueries.SubstringModulus)
+
   /** The fp-index kv frame BOTH fp-family stores publish as v1
     * (spanIndexStore and takedownIndexStore — same corpus slice, same
     * geometry): built once per pass and shared via Fixtures.memo (the
@@ -464,15 +456,17 @@ object PipelineQueries {
     * quantizer memo lifecycle). */
   private[graft] def fpIndexFrame(s: SparkSession, dir: String): DataFrame =
     Fixtures.memo(s"fp-index-kv:$dir") {
-      Dedup.fpIndexKv(
+      spanIndex.build(
           Fixtures.table(s, dir, "documents").where(col("doc_id") % DeltaMod =!= 0),
-          "doc_id", "text",
-          minLen = DedupQueries.SubstringMinLen,
-          window = DedupQueries.SubstringWindow,
-          modulus = DedupQueries.SubstringModulus)
+          spanIndex.maxBucket)
         .localCheckpoint(true)
     }
 
+  /** The BUILD half of pipeline_span_index: publish the corpus's anchored
+    * fingerprints as a KV domain (bloom sidecars for the probe's misses,
+    * like every index fixture). The md5 fingerprints are SQL-replayable,
+    * so — unlike the band index — the publish keeps the documented
+    * cap-dropping default and the oracle replays the cap. */
   def spanIndexStore(s: SparkSession, dir: String): graft.store.DomainStore = {
     val spec = DomainSpec(
       numShards = 8, indexer = classOf[graft.store.BloomKeyIndexer].getName,
@@ -498,15 +492,11 @@ object PipelineQueries {
     * lifecycle). */
   private[graft] def takedownKeyRows(s: SparkSession, dir: String): DataFrame =
     Fixtures.memo(s"takedown-fp-keyrows:$dir") {
-      Dedup.fpIndexKeyRows(
+      spanIndex.keyRows(
           Fixtures.table(s, dir, "documents")
             .where(col("doc_id") % DeltaMod =!= 0 &&
               (col("doc_id") % AuditDropMod === 0 ||
-                col("doc_id") % TakedownExtraMod === 0)),
-          "doc_id", "text",
-          minLen = DedupQueries.SubstringMinLen,
-          window = DedupQueries.SubstringWindow,
-          modulus = DedupQueries.SubstringModulus)
+                col("doc_id") % TakedownExtraMod === 0)))
         .dropDuplicates("key", "rid")
         .localCheckpoint(true)
     }
@@ -525,7 +515,7 @@ object PipelineQueries {
       capSemantics = graft.core.DomainSpec.CapTombstoneV1)
     Fixtures.domain(s, dir, "takedown-fp-index", spec) { (st, sp) =>
       st.write(fpIndexFrame(sp, dir), version = 1L)
-      Dedup.fpIndexDeleteRows(st,
+      spanIndex.deleteRows(st,
         takedownKeyRows(sp, dir)
           .where(col("rid").cast("long") % AuditDropMod === 0),
         newVersion = 2L,
@@ -533,6 +523,13 @@ object PipelineQueries {
     }
   }
 
+  /** The BUILD half of pipeline_dedup_index: band the corpus and publish
+    * the index as a KV domain (memoized per sf by Fixtures, so inside one
+    * bench pass the probe half reuses it). Bloom sidecars are what make
+    * index probes cheap (band keys are overwhelmingly misses): without
+    * the indexer, mightContain is constantly true and the advertised
+    * zero-I/O miss path never runs. Exposed separately so Bench can
+    * attribute build vs probe time (VERDICT r3 task 7). */
   def dedupIndexStore(s: SparkSession, dir: String): graft.store.DomainStore = {
     val spec = DomainSpec(
       numShards = 8, indexer = classOf[graft.store.BloomKeyIndexer].getName,

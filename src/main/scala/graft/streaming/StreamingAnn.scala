@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Similarity
 import graft.store.DomainStore
@@ -37,16 +37,11 @@ object StreamingAnn {
       queryName: String,
       maxCellMembers: Int = Similarity.MaxCellMembers,
       linked: Boolean = false): StreamingQuery =
-    vecStream.writeStream
-      .queryName(queryName)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch(VersionGate.gated(index, baseVersion) { (batch, version) =>
-        Similarity.ivfIndexUpsert(
-          index, batch, idCol, vecCol, centroids, newVersion = version,
-          maxCellMembers = maxCellMembers, linked = linked)
-      })
-      .start()
+    VersionGate.start(vecStream, index, baseVersion, checkpointDir, queryName) {
+      (batch, version) => Similarity.ivfIndexUpsert(
+        index, batch, idCol, vecCol, centroids, newVersion = version,
+        maxCellMembers = maxCellMembers, linked = linked)
+    }
 
   /** [[ingestStream]] for a PQ-coded index ([[Similarity.ivfPqIndexKv]]):
     * identical version/replay protocol, entry-union merge via
@@ -63,16 +58,11 @@ object StreamingAnn {
       queryName: String,
       maxCellMembers: Int = Similarity.MaxCellMembers,
       linked: Boolean = false): StreamingQuery =
-    vecStream.writeStream
-      .queryName(queryName)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch(VersionGate.gated(index, baseVersion) { (batch, version) =>
-        Similarity.ivfPqIndexUpsert(
-          index, batch, idCol, vecCol, centroids, books, newVersion = version,
-          maxCellMembers = maxCellMembers, linked = linked)
-      })
-      .start()
+    VersionGate.start(vecStream, index, baseVersion, checkpointDir, queryName) {
+      (batch, version) => Similarity.ivfPqIndexUpsert(
+        index, batch, idCol, vecCol, centroids, books, newVersion = version,
+        maxCellMembers = maxCellMembers, linked = linked)
+    }
 
   /** The TAKEDOWN side of the streaming ANN cycle — [[ingestStream]]'s
     * inverse for BOTH posting-list grammars (plain and PQ: removal
@@ -93,14 +83,8 @@ object StreamingAnn {
       checkpointDir: String,
       queryName: String,
       linked: Boolean = false): StreamingQuery =
-    vecStream.writeStream
-      .queryName(queryName)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch(VersionGate.gated(index, baseVersion) { (batch, version) =>
-        Similarity.ivfIndexDelete(
-          index, batch, idCol, vecCol, centroids, newVersion = version,
-          linked = linked)
-      })
-      .start()
+    VersionGate.start(vecStream, index, baseVersion, checkpointDir, queryName) {
+      (batch, version) => Similarity.ivfIndexDelete(
+        index, batch, idCol, vecCol, centroids, newVersion = version, linked = linked)
+    }
 }

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.operators.Dedup
+import graft.operators.{Dedup, IndexFamily}
 import graft.store.DomainStore
 
 /**
@@ -63,8 +63,7 @@ object StreamingDedup {
     * + local popcount verify and appends its near-dup pairs — per-batch
     * work is O(batch + candidates), no corpus table at all (the index
     * values carry the phashes). Same batch=<id> overwrite-on-replay sink
-    * discipline. Compose with [[growImageIndexStream]] as
-    * probe-then-grow. */
+    * discipline. Compose with [[growStream]] as probe-then-grow. */
   def imageDedupToFiles(
       store: DomainStore,
       hashStream: DataFrame,
@@ -86,7 +85,7 @@ object StreamingDedup {
     * a published [[graft.operators.Similarity.semIndexKv]] domain and
     * appends its verified semantic near-dup pairs (exact cosine against
     * only the candidate-named corpus rows). Compose with
-    * [[growSemIndexStream]] as probe-then-grow. */
+    * [[growStream]] as probe-then-grow. */
   def semDedupToFiles(
       store: DomainStore,
       embStream: DataFrame,
@@ -110,161 +109,72 @@ object StreamingDedup {
       .start()
 
   /** The GROWTH side of the streaming updater cycle: each micro-batch of
-    * accepted documents folds its band keys into the published index
-    * ([[Dedup.bandIndexUpsert]] — affected buckets merged, rest
-    * copy-forward), so the next delta probes today's accepts too.
-    * Version/replay protocol as [[StreamingAnn.ingestStream]]: replayed
-    * newest version no-ops, published non-newest fails loud. Compose
-    * with [[dedupAgainstIndexToFiles]] as probe-then-grow: dedup the
-    * batch against the index, admit its survivors, grow with them. */
-  def growIndexStream(
+    * accepted members folds into the published index through
+    * `family.upsert` (affected buckets merged, the rest copy-forward),
+    * so the next delta probes today's accepts too. The family descriptor
+    * carries the build's geometry (fingerprint anchors, semantic planes,
+    * the cap), so the stream cannot fold in keys no probe matches.
+    * Version/replay protocol is [[VersionGate]]'s: replayed newest
+    * version no-ops, published non-newest fails loud. Compose with the
+    * `*ToFiles` probes as probe-then-grow: dedup the batch against the
+    * index, admit its survivors, grow with them.
+    *
+    * `linked = true`: each micro-batch publishes O(delta) with untouched
+    * shards riding `_links.json` — the perpetual-updater mode at high
+    * shard counts (a copy-forward publish per micro-batch pays O(domain)
+    * raw copies each trigger); GC of the accreting link chain is the
+    * serving daemons' pull policy. */
+  def growStream(
+      family: IndexFamily,
       index: DomainStore,
-      docStream: DataFrame,
+      stream: DataFrame,
       baseVersion: Long,
       checkpointDir: String,
       queryName: String,
-      // `linked = true`: each micro-batch publishes O(delta) with
-      // untouched shards riding `_links.json` — the perpetual-updater
-      // mode at high shard counts (a copy-forward publish per
-      // micro-batch pays O(domain) raw copies each trigger); GC of the
-      // accreting link chain is the serving daemons' pull policy
       linked: Boolean = false): StreamingQuery =
-    docStream.writeStream
-      .queryName(queryName)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch(VersionGate.gated(index, baseVersion) { (batch, version) =>
-        Dedup.bandIndexUpsert(index, batch, "doc_id", "text", newVersion = version,
-          linked = linked)
-      })
-      .start()
+    VersionGate.start(stream, index, baseVersion, checkpointDir, queryName) {
+      (batch, version) => family.upsert(index, batch, version, linked)
+    }
 
-  /** The FINGERPRINT twin of [[growIndexStream]]: each micro-batch of
-    * accepted documents folds its anchored fingerprints into a published
-    * [[graft.operators.Dedup.fpIndexKv]] domain, so the next delta's
-    * [[graft.operators.Dedup.sharedSubstringAgainstIndex]] probe sees
-    * today's accepts too. Same version/replay protocol. */
-  def growFpIndexStream(
+  /** The TAKEDOWN side — the court-ordered-removal feed,
+    * [[growStream]]'s inverse: each micro-batch of removal requests (the
+    * content AS INDEXED) publishes ONE content-addressed `family.delete`
+    * version (affected buckets shrunken, emptied buckets absent,
+    * untouched shards copy-forward — or `_links.json` under `linked`,
+    * the perpetual-feed mode). Same version/replay protocol; grow and
+    * takedown feeds onto ONE domain must share a version line
+    * (interleave them behind one stream — [[updaterIndexStream]] — not
+    * two racing checkpoints). Certify each takedown with
+    * `family.removalAudit` over the same rows, the O(removals)
+    * completeness check; drifted-content requests need
+    * `family.idAudit` instead. */
+  def takedownStream(
+      family: IndexFamily,
       index: DomainStore,
-      docStream: DataFrame,
-      baseVersion: Long,
-      checkpointDir: String,
-      queryName: String,
-      // MUST match the index build's geometry: these parameters define
-      // the fingerprint KEY BYTES themselves (unlike the band twin's
-      // maxBucket, which only affects loudness) — growing a
-      // minLen=128 index with the defaults would silently fold in
-      // 64-codepoint fingerprints no probe at 128 ever matches
-      minLen: Int = 64,
-      window: Int = 8,
-      modulus: Int = 16,
-      linked: Boolean = false): StreamingQuery =
-    docStream.writeStream
-      .queryName(queryName)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch(VersionGate.gated(index, baseVersion) { (batch, version) =>
-        graft.operators.Dedup.fpIndexUpsert(index, batch, "doc_id", "text",
-          newVersion = version, minLen = minLen, window = window, modulus = modulus,
-          linked = linked)
-      })
-      .start()
-
-  /** The IMAGE twin of [[growIndexStream]]: each micro-batch of accepted
-    * image hashes (media_id, phash — e.g. `Multimodal.imageHashes` run on
-    * the arriving media) folds its pigeonhole band entries into a
-    * published [[graft.operators.Multimodal.phashIndexKv]] domain, so
-    * the next media delta's [[graft.operators.Multimodal.phashDedupAgainstIndex]]
-    * probes today's accepts too. Same version/replay protocol. */
-  def growImageIndexStream(
-      index: DomainStore,
-      hashStream: DataFrame,
+      stream: DataFrame,
       baseVersion: Long,
       checkpointDir: String,
       queryName: String,
       linked: Boolean = false): StreamingQuery =
-    hashStream.writeStream
-      .queryName(queryName)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch(VersionGate.gated(index, baseVersion) { (batch, version) =>
-        graft.operators.Multimodal.phashIndexUpsert(index, batch, newVersion = version,
-          linked = linked)
-      })
-      .start()
-
-  /** The EMBEDDING twin: each micro-batch of accepted embeddings folds
-    * its hyperplane-cell memberships into a published
-    * [[graft.operators.Similarity.semIndexKv]] domain, so the next
-    * embedding delta's semantic-dedup probe sees today's accepts too.
-    * Same version/replay protocol. */
-  def growSemIndexStream(
-      index: DomainStore,
-      embStream: DataFrame,
-      idCol: String,
-      vecCol: String,
-      planes: Int,
-      baseVersion: Long,
-      checkpointDir: String,
-      queryName: String,
-      linked: Boolean = false): StreamingQuery =
-    embStream.writeStream
-      .queryName(queryName)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch(VersionGate.gated(index, baseVersion) { (batch, version) =>
-        graft.operators.Similarity.semIndexUpsert(
-          index, batch, idCol, vecCol, newVersion = version, planes = planes,
-          linked = linked)
-      })
-      .start()
-
-  /** The TAKEDOWN side of the streaming updater cycle — the
-    * court-ordered-removal feed, [[growIndexStream]]'s inverse: each
-    * micro-batch of removal requests (doc_id, text — the content AS
-    * INDEXED) publishes ONE content-addressed takedown version
-    * ([[graft.operators.Dedup.bandIndexDelete]]: affected buckets
-    * shrunken, emptied buckets absent, untouched shards copy-forward —
-    * or `_links.json` under `linked`, the perpetual-feed mode). Same
-    * version/replay protocol as the growth streams (replayed newest
-    * no-ops, published non-newest fails loud; grow and takedown feeds
-    * onto ONE domain must share a version line — interleave them behind
-    * one stream, not two racing checkpoints). Certify each takedown
-    * with [[graft.operators.Dedup.bandIndexRemovalAudit]] over the same
-    * removal rows — the O(removals) completeness check; drifted-content
-    * requests need the idAudit fsck instead. */
-  def takedownIndexStream(
-      index: DomainStore,
-      removedStream: DataFrame,
-      baseVersion: Long,
-      checkpointDir: String,
-      queryName: String,
-      linked: Boolean = false): StreamingQuery =
-    removedStream.writeStream
-      .queryName(queryName)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch(VersionGate.gated(index, baseVersion) { (batch, version) =>
-        Dedup.bandIndexDelete(index, batch, "doc_id", "text", newVersion = version,
-          linked = linked)
-      })
-      .start()
+    VersionGate.start(stream, index, baseVersion, checkpointDir, queryName) {
+      (batch, version) => family.delete(index, batch, version, linked)
+    }
 
   /** The COMBINED updater feed — one stream, one version per batch: rows
     * carry `op` ('add' | 'remove') beside (doc_id, text), and each
     * micro-batch publishes its accepts AND its removal requests as ONE
-    * [[graft.operators.Dedup.bandIndexUpdate]] version — final bucket
-    * membership == the rebuild on corpus ∪ adds \ removes, modulo the
-    * documented cur-tombstone carve-out (a bucket the publish
+    * band-index update version ([[Dedup.bandIndex]]`.update`) — final
+    * bucket membership == the rebuild on corpus ∪ adds \ removes, modulo
+    * the documented cur-tombstone carve-out (a bucket the publish
     * cap-tombstoned carries; only a rebuild recounts it). An id on both
     * sides of one batch fails loud. This is the version-line answer for
     * domains fed by growth and takedown simultaneously — two racing
-    * wrapper streams would collide on the `baseVersion + batchId`
-    * arithmetic; here both ride one checkpoint. Unknown op values fail
-    * loud (a silently dropped 'delete' misspelling would leave
-    * court-ordered removals published). `maxBucket` MUST match the
-    * build's cap — a mismatched cap silently diverges from the rebuild
-    * at exactly the bucket sizes between the two values. */
+    * streams would collide on the `baseVersion + batchId` arithmetic;
+    * here both ride one checkpoint. Unknown op values fail loud (a
+    * silently dropped 'delete' misspelling would leave court-ordered
+    * removals published). `maxBucket` MUST match the build's cap — a
+    * mismatched cap silently diverges from the rebuild at exactly the
+    * bucket sizes between the two values. */
   def updaterIndexStream(
       index: DomainStore,
       opStream: DataFrame,
@@ -272,12 +182,10 @@ object StreamingDedup {
       checkpointDir: String,
       queryName: String,
       maxBucket: Int = graft.operators.LshBuckets.MaxBucket,
-      linked: Boolean = false): StreamingQuery =
-    opStream.writeStream
-      .queryName(queryName)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch(VersionGate.gated(index, baseVersion) { (batch, version) =>
+      linked: Boolean = false): StreamingQuery = {
+    val band = Dedup.bandIndex("doc_id", "text", maxBucket)
+    VersionGate.start(opStream, index, baseVersion, checkpointDir, queryName) {
+      (batch, version) =>
         // narrow import: functions.version would shadow the gate's param
         import org.apache.spark.sql.functions.{col, concat, lit, raise_error, when}
         val typed = batch.withColumn("op",
@@ -289,80 +197,10 @@ object StreamingDedup {
           // sides read the cached batch, not the file source 4x (the op
           // check also evaluates once per row this way)
           .persist()
-        try Dedup.bandIndexUpdate(
-          index,
-          typed.where(col("op") === "add"),
-          typed.where(col("op") === "remove"),
-          "doc_id", "text", newVersion = version, maxBucket = maxBucket,
-          linked = linked)
+        try band.update(
+          index, typed.where(col("op") === "add"), typed.where(col("op") === "remove"),
+          version, linked)
         finally typed.unpersist()
-      })
-      .start()
-
-  /** The FINGERPRINT twin of [[takedownIndexStream]] — geometry params
-    * MUST match the build's (they define the key bytes; a mismatched
-    * takedown probes keys the index never held and silently no-ops:
-    * certify with `fpIndexRemovalAudit` at the same geometry). */
-  def takedownFpIndexStream(
-      index: DomainStore,
-      removedStream: DataFrame,
-      baseVersion: Long,
-      checkpointDir: String,
-      queryName: String,
-      minLen: Int = 64,
-      window: Int = 8,
-      modulus: Int = 16,
-      linked: Boolean = false): StreamingQuery =
-    removedStream.writeStream
-      .queryName(queryName)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch(VersionGate.gated(index, baseVersion) { (batch, version) =>
-        graft.operators.Dedup.fpIndexDelete(index, batch, "doc_id", "text",
-          newVersion = version, minLen = minLen, window = window, modulus = modulus,
-          linked = linked)
-      })
-      .start()
-
-  /** The IMAGE twin of [[takedownIndexStream]]: micro-batches of removed
-    * (media_id, phash) rows — the hashes AS INDEXED. */
-  def takedownImageIndexStream(
-      index: DomainStore,
-      hashStream: DataFrame,
-      baseVersion: Long,
-      checkpointDir: String,
-      queryName: String,
-      linked: Boolean = false): StreamingQuery =
-    hashStream.writeStream
-      .queryName(queryName)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch(VersionGate.gated(index, baseVersion) { (batch, version) =>
-        graft.operators.Multimodal.phashIndexDelete(index, batch, newVersion = version,
-          linked = linked)
-      })
-      .start()
-
-  /** The EMBEDDING twin of [[takedownIndexStream]] — `planes` MUST be
-    * the build's (the cell keys). */
-  def takedownSemIndexStream(
-      index: DomainStore,
-      embStream: DataFrame,
-      idCol: String,
-      vecCol: String,
-      planes: Int,
-      baseVersion: Long,
-      checkpointDir: String,
-      queryName: String,
-      linked: Boolean = false): StreamingQuery =
-    embStream.writeStream
-      .queryName(queryName)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch(VersionGate.gated(index, baseVersion) { (batch, version) =>
-        graft.operators.Similarity.semIndexDelete(
-          index, batch, idCol, vecCol, planes = planes, newVersion = version,
-          linked = linked)
-      })
-      .start()
+    }
+  }
 }

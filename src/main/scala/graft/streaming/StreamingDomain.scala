@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.store.DomainStore
 
@@ -45,14 +45,11 @@ object StreamingDomain {
       linked: Boolean = false,
       compactEvery: Int = 0): StreamingQuery = {
     require(compactEvery >= 0, s"compactEvery must be >= 0, got $compactEvery")
-    kvStream.writeStream
-      .queryName(queryName)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      // ONE replay protocol for every index-maintaining foreachBatch
-      // loop (VersionGate): a replayed last batch is a no-op, an
-      // already-published non-latest version fails loud
-      .foreachBatch(VersionGate.gated(store, baseVersion) { (batch, version) =>
+    // ONE replay protocol for every index-maintaining foreachBatch
+    // loop (VersionGate): a replayed last batch is a no-op, an
+    // already-published non-latest version fails loud
+    VersionGate.start(kvStream, store, baseVersion, checkpointDir, queryName) {
+      (batch, version) =>
         // Keyed off the VERSION, not the batch id: replays re-derive the
         // same decision, so a re-attempted batch publishes the same mode.
         val linkThis = linked &&
@@ -64,8 +61,7 @@ object StreamingDomain {
         else
           store.upsert(batch.sparkSession, batch, version, dedupKeys = true,
             linked = linkThis)
-      })
-      .start()
+    }
   }
 
   /** The takedown twin of [[upsertStream]]: a stream of `key` rows (a
@@ -92,15 +88,11 @@ object StreamingDomain {
       linked: Boolean = false,
       compactEvery: Int = 0): StreamingQuery = {
     require(compactEvery >= 0, s"compactEvery must be >= 0, got $compactEvery")
-    keyStream.writeStream
-      .queryName(queryName)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch(VersionGate.gated(store, baseVersion) { (batch, version) =>
+    VersionGate.start(keyStream, store, baseVersion, checkpointDir, queryName) {
+      (batch, version) =>
         val linkThis = linked &&
           (compactEvery == 0 || (version - baseVersion) % compactEvery != 0)
         store.delete(batch.sparkSession, batch, version, linked = linkThis)
-      })
-      .start()
+    }
   }
 }

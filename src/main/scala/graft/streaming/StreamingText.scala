@@ -105,7 +105,7 @@ object StreamingText {
 
   /** Streaming growth of a published SEARCH-index domain
     * ([[graft.operators.Search]]) — the full-text member of the
-    * streaming updater cycle beside `StreamingDedup.growIndexStream` and
+    * streaming updater cycle beside `StreamingDedup.growStream` and
     * `StreamingAnn.ingestStream`: each micro-batch of new documents folds
     * into the affected postings (`Search.searchIndexUpsert`: append-only
     * merge, doc lengths + corpus stats advance, tombstoned terms stay
@@ -121,15 +121,10 @@ object StreamingText {
       checkpointDir: String,
       queryName: String,
       linked: Boolean = false): StreamingQuery =
-    docStream.writeStream
-      .queryName(queryName)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch(VersionGate.gated(index, baseVersion) { (batch, version) =>
-        graft.operators.Search.searchIndexUpsert(
-          index, batch, "doc_id", "text", newVersion = version, linked = linked)
-      })
-      .start()
+    VersionGate.start(docStream, index, baseVersion, checkpointDir, queryName) {
+      (batch, version) => graft.operators.Search.searchIndexUpsert(
+        index, batch, "doc_id", "text", newVersion = version, linked = linked)
+    }
 
   /** Streaming growth of a published POSITIONAL index — phrase search's
     * member of the same updater cycle ([[growSearchIndexStream]]'s
@@ -144,15 +139,10 @@ object StreamingText {
       checkpointDir: String,
       queryName: String,
       linked: Boolean = false): StreamingQuery =
-    docStream.writeStream
-      .queryName(queryName)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch(VersionGate.gated(index, baseVersion) { (batch, version) =>
-        graft.operators.Search.positionalIndexUpsert(
-          index, batch, "doc_id", "text", newVersion = version, linked = linked)
-      })
-      .start()
+    VersionGate.start(docStream, index, baseVersion, checkpointDir, queryName) {
+      (batch, version) => graft.operators.Search.positionalIndexUpsert(
+        index, batch, "doc_id", "text", newVersion = version, linked = linked)
+    }
 
   /**
    * Temperature-rebalance a DOCUMENT STREAM to a row budget — the

@@ -13,13 +13,14 @@ class ProfileSpec extends SparkSuite {
   test("per-query step: plan file, stage report, listener removed, session left running") {
     val dir = scratch("profile-plans")
     val r = Profile.query(spark, sf("sf0.001"), "q1_agg", dir)
-    // the file is the frame's explain("formatted"); a rebuilt frame
-    // differs only in its JVM-wide counters (expression and plan ids)
-    def masked(s: String) = s.replaceAll("#\\d+", "#").replaceAll("plan_id=\\d+", "plan_id=")
+    // the file is the frame's explain("formatted") with its JVM-wide
+    // counters masked; a rebuilt frame differs only in those counters
     val written = new String(Files.readAllBytes(Paths.get(dir, "q1_agg.txt")), "UTF-8")
     val expected = SparkEntry.queries("q1_agg")(spark, sf("sf0.001"))
       .queryExecution.explainString(ExplainMode.fromString("formatted"))
-    assert(masked(written) === masked(expected))
+    assert(written === Profile.masked(expected))
+    assert(written.contains("HashAggregate") && written.contains("Exchange"),
+      s"the mask erased the plan:\n$written")
     assert(r.stats.stageCount >= 1, "no stage reported")
     assert(r.exchanges >= 1, "the aggregation's shuffle is missing from the final plan")
     assert(r.buildSeconds >= 0 && r.runSeconds > 0)
@@ -35,6 +36,18 @@ class ProfileSpec extends SparkSuite {
       "the step's listener is still attached")
     assert(!spark.sparkContext.isStopped)
     assert(spark.range(3).count() === 3L)
+  }
+
+  test("masked: per-JVM counters and identity hashes go, the plan text stays") {
+    val raw = "(3) HashAggregate [codegen id : 12]\n" +
+      "Keys [1]: [l_returnflag#12]\nPushedFilters: [EqualTo(key,[B@1f2e3d)]\n" +
+      "Arguments: MapPartitionsRDD[42] at localCheckpoint at IndexDelete.scala:360, plan_id=7\n" +
+      "Arguments: graft.operators.Multimodal$$$Lambda$5748/0x00007fc7113f5000@f456711, obj#19"
+    assert(Profile.masked(raw) ===
+      "(3) HashAggregate [codegen id : 12]\n" +
+        "Keys [1]: [l_returnflag#]\nPushedFilters: [EqualTo(key,[B@)]\n" +
+        "Arguments: MapPartitionsRDD[] at localCheckpoint at IndexDelete.scala:360, plan_id=\n" +
+        "Arguments: graft.operators.Multimodal$$$Lambda, obj#")
   }
 
   test("exchange count equals the plan's shuffle nodes, nested branches included") {

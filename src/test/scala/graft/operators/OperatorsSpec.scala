@@ -779,23 +779,46 @@ class OperatorsSpec extends SparkSuite {
     // (isCheckpointed — already true at capture because the operators
     // materialize eagerly via localCheckpoint(true) before returning;
     // isLocallyCheckpointed would be the precise probe but is
-    // private[spark]): a parallel suite's plain persist() that happens
-    // to land inside a window can never read as ours (ADVICE r16).
-    def leakWindow(mk: => org.apache.spark.sql.DataFrame): Set[Int] = {
+    // private[spark]). Plain persists landing in a window are captured
+    // too and must be gone by the same deadline: an operator that
+    // persists and never releases keeps its blocks through GC (the
+    // CacheManager holds them), while a foreign suite's transient
+    // persist is released on its own.
+    def leakWindow(action: => Unit): (Set[Int], Set[Int]) = {
       val before = spark.sparkContext.getPersistentRDDs.keySet
-      mk.write.format("noop").mode("overwrite").save()
-      (spark.sparkContext.getPersistentRDDs -- before.toSeq)
-        .collect { case (id, rdd) if rdd.isCheckpointed => id }
-        .toSet
+      action
+      val added = spark.sparkContext.getPersistentRDDs -- before.toSeq
+      // ids only: a map's keySet is a view that holds its RDDs strongly
+      (added.collect { case (id, rdd) if rdd.isCheckpointed => id }.toSet,
+        added.keysIterator.toSet)
     }
-    val held =
-      leakWindow(Dedup.minHashPairs(docs, "doc_id", "text", 0.8)) ++
-        leakWindow(Dedup.simHashPairsBanded(Dedup.simHash(docs, "doc_id", "text"), 3)) ++
-        leakWindow(Dedup.components(
-          docs.select(col("doc_id").as("id")),
-          Dedup.minHashPairs(docs, "doc_id", "text", 0.8))) ++
-        leakWindow(Similarity.nearDupPairsBucketed(embs, "vec_id", "embedding", 0.44))
-    assert(held.nonEmpty,
+    def frameWindow(mk: => org.apache.spark.sql.DataFrame): (Set[Int], Set[Int]) =
+      leakWindow(mk.write.format("noop").mode("overwrite").save())
+    // the generic membership-index ops persist internally and must
+    // release what they persist: one update (both engines' inputs, the
+    // probe and merge checkpoints) on a ramfs domain
+    val leakAuth = "opsleak"
+    graft.store.RamFileSystem.clear(leakAuth)
+    val leakDocs = spark.read.parquet(sf("sf0.001/documents.parquet"))
+      .select(col("doc_id"), col("text")).orderBy(col("doc_id")).limit(20)
+    val leakIndex = graft.store.DomainStore.create(s"ramfs://$leakAuth/band",
+      graft.core.DomainSpec(numShards = 2, persistenceFormat = graft.core.DomainSpec.KvSorted),
+      new org.apache.hadoop.conf.Configuration())
+    leakIndex.write(Dedup.bandIndexKv(leakDocs.where(col("doc_id") % 2 === 0),
+      "doc_id", "text"), 1L)
+    val windows = Seq(
+      frameWindow(Dedup.minHashPairs(docs, "doc_id", "text", 0.8)),
+      frameWindow(Dedup.simHashPairsBanded(Dedup.simHash(docs, "doc_id", "text"), 3)),
+      frameWindow(Dedup.components(
+        docs.select(col("doc_id").as("id")),
+        Dedup.minHashPairs(docs, "doc_id", "text", 0.8))),
+      frameWindow(Similarity.nearDupPairsBucketed(embs, "vec_id", "embedding", 0.44)),
+      leakWindow(Dedup.bandIndex("doc_id", "text").update(leakIndex,
+        leakDocs.where(col("doc_id") % 2 =!= 0),
+        leakDocs.where(col("doc_id") % 4 === 0), 2L)))
+    assert(leakIndex.latestVersion === 2L)
+    val held = windows.flatMap(_._2).toSet
+    assert(windows.flatMap(_._1).nonEmpty,
       "expected the pair families to hold checkpoint blocks while frames are live")
     // frames were method-local to leakWindow: unreachable now. Reap is
     // async (weak-ref queue drained by ContextCleaner after GC) — poll
@@ -807,7 +830,8 @@ class OperatorsSpec extends SparkSuite {
       Thread.sleep(500)
     }
     assert(leaked.isEmpty,
-      s"checkpoint blocks survived frame drop + GC: ${leaked.mkString(", ")}")
+      s"checkpoint or persist blocks survived frame drop + GC: ${leaked.mkString(", ")}")
+    graft.store.RamFileSystem.clear(leakAuth)
   }
 
   test("bounded_collect: exact cap boundary, canonical orders, merge across partitions") {
@@ -984,7 +1008,7 @@ class OperatorsSpec extends SparkSuite {
 
     val inc = graft.store.DomainStore.create(scratch("band-upsert/inc"), spec, conf)
     inc.write(Dedup.bandIndexKv(base, "doc_id", "text"), 1L)
-    Dedup.bandIndexUpsert(inc, delta, "doc_id", "text", newVersion = 2L)
+    Dedup.bandIndex("doc_id", "text").upsert(inc, delta, newVersion = 2L)
     val full = graft.store.DomainStore.create(scratch("band-upsert/full"), spec, conf)
     full.write(Dedup.bandIndexKv(union, "doc_id", "text"), 1L)
     def pairs(st: graft.store.DomainStore) = st.read(spark)
@@ -1004,7 +1028,7 @@ class OperatorsSpec extends SparkSuite {
     val later = (200L until 210L).map(i => (i, sameText)).toDF("doc_id", "text")
     val capped = graft.store.DomainStore.create(scratch("band-upsert/cap"), spec, conf)
     capped.write(Dedup.bandIndexKv(same, "doc_id", "text", maxBucket = 40), 1L)
-    Dedup.bandIndexUpsert(capped, more, "doc_id", "text", 2L, maxBucket = 40)
+    Dedup.bandIndex("doc_id", "text", maxBucket = 40).upsert(capped, more, 2L)
     val crossed = graft.store.DomainStore.create(scratch("band-upsert/crossed"), spec, conf)
     crossed.write(
       Dedup.bandIndexKv(same.unionByName(more), "doc_id", "text", maxBucket = 40), 1L)
@@ -1013,7 +1037,7 @@ class OperatorsSpec extends SparkSuite {
     assert(pairs(capped).exists(_._2 == tombstone), "cap crossing left no tombstone")
     // the tombstoned bucket stays dropped through the NEXT upsert —
     // byte-identical to the three-way union rebuild (the resurrect case)
-    Dedup.bandIndexUpsert(capped, later, "doc_id", "text", 3L, maxBucket = 40)
+    Dedup.bandIndex("doc_id", "text", maxBucket = 40).upsert(capped, later, 3L)
     val crossed3 = graft.store.DomainStore.create(scratch("band-upsert/crossed3"), spec, conf)
     crossed3.write(
       Dedup.bandIndexKv(same.unionByName(more).unionByName(later),
@@ -1035,7 +1059,7 @@ class OperatorsSpec extends SparkSuite {
       (900L until 905L).map(i => (i, s"unique text for doc number $i here"))
         .toDF("doc_id", "text"), "doc_id", "text", maxBucket = 40), 1L)
     val bigDelta = (1000L until 1050L).map(i => (i, sameText)).toDF("doc_id", "text")
-    Dedup.bandIndexUpsert(fresh, bigDelta, "doc_id", "text", 2L, maxBucket = 40)
+    Dedup.bandIndex("doc_id", "text", maxBucket = 40).upsert(fresh, bigDelta, 2L)
     val freshFull = graft.store.DomainStore.create(scratch("band-upsert/fresh-full"), spec, conf)
     freshFull.write(Dedup.bandIndexKv(
       (900L until 905L).map(i => (i, s"unique text for doc number $i here"))
@@ -1084,7 +1108,7 @@ class OperatorsSpec extends SparkSuite {
     assert(probe(deltaDocs) === oriented)
 
     // upsert == rebuild on the union, byte-identical
-    Dedup.fpIndexUpsert(idx, deltaDocs, "doc_id", "text", newVersion = 2L)
+    Dedup.fpIndex("doc_id", "text").upsert(idx, deltaDocs, newVersion = 2L)
     val full = graft.store.DomainStore.create(scratch("fp-idx/full"), spec, conf)
     full.write(Dedup.fpIndexKv(baseDocs.unionByName(deltaDocs), "doc_id", "text"), 1L)
     def pairs(st: graft.store.DomainStore) = st.read(spark)
@@ -1097,7 +1121,7 @@ class OperatorsSpec extends SparkSuite {
     // removed doc's pairs stop surfacing on the next probe
     val idx2 = graft.store.DomainStore.create(scratch("fp-idx/del"), spec, conf)
     idx2.write(Dedup.fpIndexKv(baseDocs, "doc_id", "text"), 1L)
-    Dedup.fpIndexDelete(idx2, baseDocs.where(col("doc_id") === 1L), "doc_id", "text", 2L)
+    Dedup.fpIndex("doc_id", "text").delete(idx2, baseDocs.where(col("doc_id") === 1L), 2L)
     val minus = graft.store.DomainStore.create(scratch("fp-idx/minus"), spec, conf)
     minus.write(Dedup.fpIndexKv(baseDocs.where(col("doc_id") =!= 1L), "doc_id", "text"), 1L)
     assert(pairs(idx2) === pairs(minus))
@@ -1106,17 +1130,17 @@ class OperatorsSpec extends SparkSuite {
     assert(afterDel === Set((100L, 2L), (104L, 3L)))
 
     // the rows-based seam (one shared derivation for takedown +
-    // certification, r17): pre-derived fpIndexKeyRows through
-    // fpIndexDeleteRows must publish byte-identically to the docs-based
+    // certification, r17): pre-derived keyRows through
+    // deleteRows must publish byte-identically to the docs-based
     // delete, and the SAME rows frame must certify the takedown clean
     val idx3 = graft.store.DomainStore.create(scratch("fp-idx/del-rows"), spec, conf)
     idx3.write(Dedup.fpIndexKv(baseDocs, "doc_id", "text"), 1L)
-    val delRows = Dedup.fpIndexKeyRows(
-        baseDocs.where(col("doc_id") === 1L), "doc_id", "text")
+    val delRows = Dedup.fpIndex("doc_id", "text").keyRows(
+        baseDocs.where(col("doc_id") === 1L))
       .localCheckpoint(true)
-    Dedup.fpIndexDeleteRows(idx3, delRows, newVersion = 2L)
+    Dedup.fpIndex("doc_id", "text").deleteRows(idx3, delRows, newVersion = 2L)
     assert(pairs(idx3) === pairs(minus))
-    assert(Dedup.fpIndexRemovalAuditRows(idx3, delRows).count() === 0L)
+    assert(Dedup.fpIndex("doc_id", "text").removalAuditRows(idx3, delRows).count() === 0L)
 
     // cap tombstones: 6 docs sharing one run published at cap 4 -> the
     // shared fingerprints tombstone (not vanish), probes miss them, an
@@ -1132,7 +1156,7 @@ class OperatorsSpec extends SparkSuite {
     assert(pairs(cap).exists(_._2 == tombstone), "capped publish left no tombstone")
     assert(Dedup.sharedSubstringAgainstIndex(
       cap, Seq((900L, boiler)).toDF("doc_id", "text"), "doc_id", "text").count() === 0L)
-    Dedup.fpIndexUpsert(cap, twoMore, "doc_id", "text", newVersion = 2L, maxBucket = 4)
+    Dedup.fpIndex("doc_id", "text", maxBucket = 4).upsert(cap, twoMore, newVersion = 2L)
     val capFull = graft.store.DomainStore.create(scratch("fp-idx/cap-full"), spec, conf)
     capFull.write(
       Dedup.fpIndexKv(sixSame.unionByName(twoMore), "doc_id", "text", maxBucket = 4), 1L)
@@ -1149,7 +1173,7 @@ class OperatorsSpec extends SparkSuite {
     val fpHot = (800L until 806L).map(i => (i, boiler)).toDF("doc_id", "text")
     val fpFresh = graft.store.DomainStore.create(scratch("fp-idx/delta-hot"), spec, conf)
     fpFresh.write(Dedup.fpIndexKv(fpBase, "doc_id", "text", maxBucket = 4), 1L)
-    Dedup.fpIndexUpsert(fpFresh, fpHot, "doc_id", "text", newVersion = 2L, maxBucket = 4)
+    Dedup.fpIndex("doc_id", "text", maxBucket = 4).upsert(fpFresh, fpHot, newVersion = 2L)
     val fpFreshFull = graft.store.DomainStore.create(scratch("fp-idx/delta-hot-full"), spec, conf)
     fpFreshFull.write(
       Dedup.fpIndexKv(fpBase.unionByName(fpHot), "doc_id", "text", maxBucket = 4), 1L)
@@ -1201,7 +1225,7 @@ class OperatorsSpec extends SparkSuite {
     // upsert == rebuild on the union corpus (incl. idempotent re-ingest)
     val inc = graft.store.DomainStore.create(scratch("phash-ix/inc"), spec, conf)
     inc.write(Multimodal.phashIndexKv(corpusH), 1L)
-    Multimodal.phashIndexUpsert(
+    Multimodal.phashIndex().upsert(
       inc, deltaH.unionByName(corpusH.limit(3)), newVersion = 2L)
     val full = graft.store.DomainStore.create(scratch("phash-ix/full"), spec, conf)
     full.write(Multimodal.phashIndexKv(corpusH.unionByName(deltaH)), 1L)
@@ -1219,13 +1243,13 @@ class OperatorsSpec extends SparkSuite {
     val sameC = (200L until 210L).map(i => (i, 7L)).toDF("media_id", "phash")
     val capped = graft.store.DomainStore.create(scratch("phash-ix/cap"), spec, conf)
     capped.write(Multimodal.phashIndexKv(sameA, maxBucket = 40), 1L)
-    Multimodal.phashIndexUpsert(capped, sameB, 2L, maxBucket = 40)
+    Multimodal.phashIndex(maxBucket = 40).upsert(capped, sameB, 2L)
     val crossed = graft.store.DomainStore.create(scratch("phash-ix/crossed"), spec, conf)
     crossed.write(Multimodal.phashIndexKv(sameA.unionByName(sameB), maxBucket = 40), 1L)
     assert(kvPairs(capped) === kvPairs(crossed))
     val tombstone = graft.core.IndexTombstone.Value.getBytes("UTF-8").toSeq
     assert(kvPairs(capped).exists(_._2 == tombstone), "cap crossing left no tombstone")
-    Multimodal.phashIndexUpsert(capped, sameC, 3L, maxBucket = 40)
+    Multimodal.phashIndex(maxBucket = 40).upsert(capped, sameC, 3L)
     val crossed3 = graft.store.DomainStore.create(scratch("phash-ix/crossed3"), spec, conf)
     crossed3.write(
       Multimodal.phashIndexKv(sameA.unionByName(sameB).unionByName(sameC), maxBucket = 40), 1L)
@@ -1237,7 +1261,7 @@ class OperatorsSpec extends SparkSuite {
     val phHot = (700L until 745L).map(i => (i, 9L)).toDF("media_id", "phash")
     val phFresh = graft.store.DomainStore.create(scratch("phash-ix/delta-hot"), spec, conf)
     phFresh.write(Multimodal.phashIndexKv(phBase, maxBucket = 40), 1L)
-    Multimodal.phashIndexUpsert(phFresh, phHot, 2L, maxBucket = 40)
+    Multimodal.phashIndex(maxBucket = 40).upsert(phFresh, phHot, 2L)
     val phFreshFull = graft.store.DomainStore.create(scratch("phash-ix/delta-hot-full"), spec, conf)
     phFreshFull.write(Multimodal.phashIndexKv(phBase.unionByName(phHot), maxBucket = 40), 1L)
     assert(kvPairs(phFresh) === kvPairs(phFreshFull))
@@ -1253,7 +1277,7 @@ class OperatorsSpec extends SparkSuite {
     val chg = graft.store.DomainStore.create(scratch("phash-ix/chg"), spec, conf)
     chg.write(Multimodal.phashIndexKv(orig), 1L)
     val e4 = intercept[Exception](
-      Multimodal.phashIndexUpsert(
+      Multimodal.phashIndex().upsert(
         chg, Seq((2L, 103L)).toDF("media_id", "phash"), 2L)) // was 102, hamming 1
     assert(messages(e4).exists(_.contains("CHANGED")), messages(e4).mkString(" | "))
 
@@ -1311,8 +1335,8 @@ class OperatorsSpec extends SparkSuite {
     // upsert == rebuild on the union (idempotent re-ingest included)
     val inc = graft.store.DomainStore.create(scratch("sem-ix/inc"), spec, conf)
     inc.write(Similarity.semIndexKv(corpus, "vec_id", "embedding", planes), 1L)
-    Similarity.semIndexUpsert(
-      inc, delta.unionByName(corpus.limit(3)), "vec_id", "embedding", 2L, planes)
+    Similarity.semIndex("vec_id", "embedding", planes).upsert(
+      inc, delta.unionByName(corpus.limit(3)), 2L)
     val full = graft.store.DomainStore.create(scratch("sem-ix/full"), spec, conf)
     full.write(Similarity.semIndexKv(emb, "vec_id", "embedding", planes), 1L)
     def kvPairs(st: graft.store.DomainStore) = st.read(spark)
@@ -1339,16 +1363,16 @@ class OperatorsSpec extends SparkSuite {
       .toDF("vec_id", "embedding", "label")
     val capped = graft.store.DomainStore.create(scratch("sem-ix/cap"), spec, conf)
     capped.write(Similarity.semIndexKv(cellA, "vec_id", "embedding", planes, maxBucket = 4), 1L)
-    Similarity.semIndexUpsert(
-      capped, cellB, "vec_id", "embedding", 2L, planes, maxBucket = 4)
+    Similarity.semIndex("vec_id", "embedding", planes, maxBucket = 4).upsert(
+      capped, cellB, 2L)
     val crossed = graft.store.DomainStore.create(scratch("sem-ix/crossed"), spec, conf)
     crossed.write(Similarity.semIndexKv(
       cellA.unionByName(cellB), "vec_id", "embedding", planes, maxBucket = 4), 1L)
     assert(kvPairs(capped) === kvPairs(crossed))
     val tombstone = graft.core.IndexTombstone.Value.getBytes("UTF-8").toSeq
     assert(kvPairs(capped).exists(_._2 == tombstone), "cap crossing left no tombstone")
-    Similarity.semIndexUpsert(
-      capped, cellC, "vec_id", "embedding", 3L, planes, maxBucket = 4)
+    Similarity.semIndex("vec_id", "embedding", planes, maxBucket = 4).upsert(
+      capped, cellC, 3L)
     val crossed3 = graft.store.DomainStore.create(scratch("sem-ix/crossed3"), spec, conf)
     crossed3.write(Similarity.semIndexKv(
       cellA.unionByName(cellB).unionByName(cellC),
@@ -1359,7 +1383,7 @@ class OperatorsSpec extends SparkSuite {
       .toDF("vec_id", "embedding", "label")
     val semFresh = graft.store.DomainStore.create(scratch("sem-ix/delta-hot"), spec, conf)
     semFresh.write(Similarity.semIndexKv(cellA, "vec_id", "embedding", planes, maxBucket = 4), 1L)
-    Similarity.semIndexUpsert(semFresh, cellHot, "vec_id", "embedding", 2L, planes, maxBucket = 4)
+    Similarity.semIndex("vec_id", "embedding", planes, maxBucket = 4).upsert(semFresh, cellHot, 2L)
     val semFreshFull = graft.store.DomainStore.create(scratch("sem-ix/delta-hot-full"), spec, conf)
     semFreshFull.write(Similarity.semIndexKv(
       cellA.unionByName(cellHot), "vec_id", "embedding", planes, maxBucket = 4), 1L)
@@ -1407,11 +1431,11 @@ class OperatorsSpec extends SparkSuite {
     band.write(Dedup.bandIndexKv(docs, "doc_id", "text"), 1L)
     def loud(f: => Any): String =
       intercept[IllegalArgumentException](f).getMessage
-    assert(loud(Multimodal.phashIndexUpsert(band, hashes, 2L))
+    assert(loud(Multimodal.phashIndex().upsert(band, hashes, 2L))
       .contains("'lsh-band' index, not 'phash-band'"))
     assert(loud(Multimodal.phashDedupAgainstIndex(band, hashes))
       .contains("'lsh-band' index, not 'phash-band'"))
-    assert(loud(Similarity.semIndexUpsert(band, emb, "vec_id", "embedding", 2L, 3))
+    assert(loud(Similarity.semIndex("vec_id", "embedding", 3).upsert(band, emb, 2L))
       .contains("'lsh-band' index, not 'sem-cell'"))
 
     // ...and a text call aimed at an IMAGE index fails the same way
@@ -1452,18 +1476,18 @@ class OperatorsSpec extends SparkSuite {
       assert(m.contains("published before cap tombstones"), m)
       m
     }
-    assert(refused(Dedup.bandIndexUpsert(
+    assert(refused(Dedup.bandIndex("doc_id", "text").upsert(
       legacy("band", Dedup.bandIndexKv(docs, "doc_id", "text")),
-      docs, "doc_id", "text", 2L)).contains("bandIndexKv"))
-    assert(refused(Dedup.fpIndexUpsert(
+      docs, 2L)).contains("bandIndexKv"))
+    assert(refused(Dedup.fpIndex("doc_id", "text", minLen = 8).upsert(
       legacy("fp", Dedup.fpIndexKv(docs, "doc_id", "text", minLen = 8)),
-      docs, "doc_id", "text", 2L, minLen = 8)).contains("fpIndexKv"))
-    assert(refused(Multimodal.phashIndexUpsert(
+      docs, 2L)).contains("fpIndexKv"))
+    assert(refused(Multimodal.phashIndex().upsert(
       legacy("ph", Multimodal.phashIndexKv(hashes)), hashes, 2L))
       .contains("phashIndexKv"))
-    assert(refused(Similarity.semIndexUpsert(
+    assert(refused(Similarity.semIndex("vec_id", "embedding", 3).upsert(
       legacy("sem", Similarity.semIndexKv(emb, "vec_id", "embedding", 3)),
-      emb, "vec_id", "embedding", 2L, 3)).contains("semIndexKv"))
+      emb, 2L)).contains("semIndexKv"))
 
     // the spec field is the zero-job authority (the indexType precedent):
     // a legacy publish whose build verifiably dropped nothing can declare
@@ -1474,15 +1498,15 @@ class OperatorsSpec extends SparkSuite {
     declared.write(
       Dedup.bandIndexKv(docs, "doc_id", "text")
         .where(col("key") =!= lit(IndexMarker.CapKey)), 1L)
-    Dedup.bandIndexUpsert(declared, docs, "doc_id", "text", 2L)
+    Dedup.bandIndex("doc_id", "text").upsert(declared, docs, 2L)
     assert(declared.latestVersion === 2L)
     // fresh publishes carry the in-data marker, so growth needs no spec
     // declaration — and upsert keeps carrying the marker forward (the
     // gate stays green on the grown version too)
     val fresh = graft.store.DomainStore.create(scratch("cap-gate/fresh"), spec, conf)
     fresh.write(Dedup.bandIndexKv(docs, "doc_id", "text"), 1L)
-    Dedup.bandIndexUpsert(fresh, docs, "doc_id", "text", 2L)
-    Dedup.bandIndexUpsert(fresh, docs, "doc_id", "text", 3L)
+    Dedup.bandIndex("doc_id", "text").upsert(fresh, docs, 2L)
+    Dedup.bandIndex("doc_id", "text").upsert(fresh, docs, 3L)
     assert(fresh.latestVersion === 3L)
     // an unknown capSemantics value is a spec error, never a silent pass
     intercept[IllegalArgumentException](
@@ -1498,7 +1522,7 @@ class OperatorsSpec extends SparkSuite {
           lit(IndexMarker.CapKey).as("key"),
           lit("tombstone-v99".getBytes("UTF-8")).as("value"))), 1L)
     val eFuture = intercept[IllegalArgumentException](
-      Dedup.bandIndexUpsert(futureEra, docs, "doc_id", "text", 2L))
+      Dedup.bandIndex("doc_id", "text").upsert(futureEra, docs, 2L))
     assert(eFuture.getMessage.contains("declares cap semantics 'tombstone-v99'"),
       eFuture.getMessage)
   }
@@ -1521,7 +1545,7 @@ class OperatorsSpec extends SparkSuite {
     val keptDocs = docs.where(col("doc_id") % 5 =!= 0)
     val band = graft.store.DomainStore.create(scratch("ix-del/band"), spec, conf)
     band.write(Dedup.bandIndexKv(docs, "doc_id", "text"), 1L)
-    Dedup.bandIndexDelete(band, removedDocs, "doc_id", "text", 2L)
+    Dedup.bandIndex("doc_id", "text").delete(band, removedDocs, 2L)
     val bandRebuilt = graft.store.DomainStore.create(scratch("ix-del/band-rb"), spec, conf)
     bandRebuilt.write(Dedup.bandIndexKv(keptDocs, "doc_id", "text"), 1L)
     assert(kvPairs(band) === kvPairs(bandRebuilt))
@@ -1551,8 +1575,8 @@ class OperatorsSpec extends SparkSuite {
     val spec64 = spec.copy(numShards = 64)
     val bandL = graft.store.DomainStore.create(scratch("ix-del/band-lnk"), spec64, conf)
     bandL.write(Dedup.bandIndexKv(docs, "doc_id", "text"), 1L)
-    Dedup.bandIndexDelete(
-      bandL, docs.where(col("doc_id") === oneId), "doc_id", "text", 2L, linked = true)
+    Dedup.bandIndex("doc_id", "text").delete(
+      bandL, docs.where(col("doc_id") === oneId), 2L, linked = true)
     val bandLRebuilt =
       graft.store.DomainStore.create(scratch("ix-del/band-lnk-rb"), spec64, conf)
     bandLRebuilt.write(
@@ -1569,7 +1593,7 @@ class OperatorsSpec extends SparkSuite {
     val extraDoc =
       Seq((888888L, "an entirely fresh growth document for the linked upsert twin"))
         .toDF("doc_id", "text")
-    Dedup.bandIndexUpsert(bandL, extraDoc, "doc_id", "text", 3L, linked = true)
+    Dedup.bandIndex("doc_id", "text").upsert(bandL, extraDoc, 3L, linked = true)
     val bandLGrown =
       graft.store.DomainStore.create(scratch("ix-del/band-lnk-grown"), spec64, conf)
     bandLGrown.write(Dedup.bandIndexKv(
@@ -1586,7 +1610,7 @@ class OperatorsSpec extends SparkSuite {
     val keptEmb = emb.where(col("vec_id") % 4 =!= 0)
     val sem = graft.store.DomainStore.create(scratch("ix-del/sem"), spec, conf)
     sem.write(Similarity.semIndexKv(emb, "vec_id", "embedding", 3), 1L)
-    Similarity.semIndexDelete(sem, remEmb, "vec_id", "embedding", 3, 2L)
+    Similarity.semIndex("vec_id", "embedding", 3).delete(sem, remEmb, 2L)
     val semRebuilt = graft.store.DomainStore.create(scratch("ix-del/sem-rb"), spec, conf)
     semRebuilt.write(Similarity.semIndexKv(keptEmb, "vec_id", "embedding", 3), 1L)
     assert(kvPairs(sem) === kvPairs(semRebuilt))
@@ -1597,7 +1621,7 @@ class OperatorsSpec extends SparkSuite {
     val keptH = hashes.where(col("media_id") % 3 =!= 0)
     val ph = graft.store.DomainStore.create(scratch("ix-del/ph"), spec, conf)
     ph.write(Multimodal.phashIndexKv(hashes), 1L)
-    Multimodal.phashIndexDelete(ph, remH, 2L)
+    Multimodal.phashIndex().delete(ph, remH, 2L)
     val phRebuilt = graft.store.DomainStore.create(scratch("ix-del/ph-rb"), spec, conf)
     phRebuilt.write(Multimodal.phashIndexKv(keptH), 1L)
     assert(kvPairs(ph) === kvPairs(phRebuilt))
@@ -1623,7 +1647,7 @@ class OperatorsSpec extends SparkSuite {
 
     // wrong-type guard holds for deletes too
     val e = intercept[IllegalArgumentException](
-      Similarity.semIndexDelete(band, remEmb, "vec_id", "embedding", 3, 9L))
+      Similarity.semIndex("vec_id", "embedding", 3).delete(band, remEmb, 9L))
     assert(e.getMessage.contains("'lsh-band' index, not 'sem-cell'"))
     // ...and for the marker-free ANN family via the SPEC declaration:
     // an ivf takedown aimed at a sem-declared domain fails loud
@@ -1657,9 +1681,8 @@ class OperatorsSpec extends SparkSuite {
     assert(messages(e4).exists(_.contains("no integral id part")), messages(e4).mkString(" | "))
     // deleting never-indexed content publishes a no-op version
     val before = kvPairs(band)
-    Dedup.bandIndexDelete(
-      band, Seq((777777L, "totally novel unseen takedown text")).toDF("doc_id", "text"),
-      "doc_id", "text", 3L)
+    Dedup.bandIndex("doc_id", "text").delete(
+      band, Seq((777777L, "totally novel unseen takedown text")).toDF("doc_id", "text"), 3L)
     assert(kvPairs(band) === before)
     assert(band.latestVersion === 3L)
   }
@@ -1679,13 +1702,13 @@ class OperatorsSpec extends SparkSuite {
       .select(col("doc_id"), col("text")).orderBy(col("doc_id")).limit(30)
     val band = graft.store.DomainStore.create(scratch("ix-audit/band"), spec, conf)
     band.write(Dedup.bandIndexKv(docs, "doc_id", "text"), 1L)
-    assert(Dedup.bandIndexIdAudit(band, docs, "doc_id", "text").isEmpty)
+    assert(Dedup.bandIndex("doc_id", "text").idAudit(band, docs).isEmpty)
     val gone = docs.orderBy(col("doc_id")).limit(1)
       .collect()(0).getLong(0) // takedown target of record
     val record = docs.where(col("doc_id") =!= gone)
       .unionByName(Seq((990001L, "a genuinely novel never indexed document text body"))
         .toDF("doc_id", "text"))
-    val k1 = kinds(Dedup.bandIndexIdAudit(band, record, "doc_id", "text"))
+    val k1 = kinds(Dedup.bandIndex("doc_id", "text").idAudit(band, record))
     assert(k1.keys.map(_._1).toSet === Set(gone.toString, "990001"))
     assert(k1.keySet.forall { case (id, kind) =>
       if (id == gone.toString) kind == "stale" else kind == "unindexed" })
@@ -1695,13 +1718,13 @@ class OperatorsSpec extends SparkSuite {
     // empties them (audit clean, store == rebuild-on-survivors)
     val drifted = Seq((gone, "completely different drifted takedown text payload"))
       .toDF("doc_id", "text")
-    Dedup.bandIndexDelete(band, drifted, "doc_id", "text", 2L)
+    Dedup.bandIndex("doc_id", "text").delete(band, drifted, 2L)
     val survivors = docs.where(col("doc_id") =!= gone)
-    val afterDrifted = kinds(Dedup.bandIndexIdAudit(band, survivors, "doc_id", "text"))
+    val afterDrifted = kinds(Dedup.bandIndex("doc_id", "text").idAudit(band, survivors))
     assert(afterDrifted.nonEmpty && afterDrifted.keys.forall(_ == (gone.toString, "stale")),
       s"drifted takedown should leave only stale rows for $gone: $afterDrifted")
-    Dedup.bandIndexDelete(band, docs.where(col("doc_id") === gone), "doc_id", "text", 3L)
-    assert(Dedup.bandIndexIdAudit(band, survivors, "doc_id", "text").isEmpty)
+    Dedup.bandIndex("doc_id", "text").delete(band, docs.where(col("doc_id") === gone), 3L)
+    assert(Dedup.bandIndex("doc_id", "text").idAudit(band, survivors).isEmpty)
     val rebuilt = graft.store.DomainStore.create(scratch("ix-audit/band-rb"), spec, conf)
     rebuilt.write(Dedup.bandIndexKv(survivors, "doc_id", "text"), 1L)
     def kvPairs(st: graft.store.DomainStore) = st.read(spark)
@@ -1718,11 +1741,10 @@ class OperatorsSpec extends SparkSuite {
     val fpIdx = graft.store.DomainStore.create(scratch("ix-audit/fp"), spec, conf)
     fpIdx.write(Dedup.fpIndexKv(fpDocs, "doc_id", "text", minLen = 32, window = 4,
       modulus = 4), 1L)
-    assert(Dedup.fpIndexIdAudit(fpIdx, fpDocs, "doc_id", "text", minLen = 32,
-      window = 4, modulus = 4).isEmpty)
+    val fpFam = Dedup.fpIndex("doc_id", "text", minLen = 32, window = 4, modulus = 4)
+    assert(fpFam.idAudit(fpIdx, fpDocs).isEmpty)
     val fpRecord = fpDocs.where(col("doc_id") =!= 3L)
-    val k2 = kinds(Dedup.fpIndexIdAudit(fpIdx, fpRecord, "doc_id", "text",
-      minLen = 32, window = 4, modulus = 4))
+    val k2 = kinds(fpFam.idAudit(fpIdx, fpRecord))
     assert(k2.nonEmpty && k2.keys.forall(_ == ("3", "stale")), k2.toString)
 
     // phash family: compared at FULL id:phash entry granularity — a
@@ -1732,11 +1754,11 @@ class OperatorsSpec extends SparkSuite {
     val hashes = (0L until 20L).map(i => (i, i * 37L + (i % 3))).toDF("media_id", "phash")
     val ph = graft.store.DomainStore.create(scratch("ix-audit/ph"), spec, conf)
     ph.write(Multimodal.phashIndexKv(hashes), 1L)
-    assert(Multimodal.phashIndexIdAudit(ph, hashes).isEmpty)
+    assert(Multimodal.phashIndex().idAudit(ph, hashes).isEmpty)
     val reHashed = hashes.withColumn("phash",
       when(col("media_id") === 5L, col("phash").bitwiseXOR(lit(1L)))
         .otherwise(col("phash")))
-    val k3 = kinds(Multimodal.phashIndexIdAudit(ph, reHashed))
+    val k3 = kinds(Multimodal.phashIndex().idAudit(ph, reHashed))
     assert(k3.keys.map(_._1).toSet === Set("5"), k3.toString)
     assert(k3.contains(("5", "stale")) && k3.contains(("5", "unindexed")), k3.toString)
     // bands 1..3 share buckets (only bit 0 flipped): stale and unindexed
@@ -1748,10 +1770,10 @@ class OperatorsSpec extends SparkSuite {
       .select(col("vec_id"), col("embedding")).orderBy(col("vec_id")).limit(40)
     val sem = graft.store.DomainStore.create(scratch("ix-audit/sem"), spec, conf)
     sem.write(Similarity.semIndexKv(emb, "vec_id", "embedding", 3), 1L)
-    assert(Similarity.semIndexIdAudit(sem, emb, "vec_id", "embedding", 3).isEmpty)
+    assert(Similarity.semIndex("vec_id", "embedding", 3).idAudit(sem, emb).isEmpty)
     val semGone = emb.orderBy(col("vec_id")).limit(1).collect()(0).getLong(0)
-    val k4 = kinds(Similarity.semIndexIdAudit(
-      sem, emb.where(col("vec_id") =!= semGone), "vec_id", "embedding", 3))
+    val k4 = kinds(Similarity.semIndex("vec_id", "embedding", 3).idAudit(
+      sem, emb.where(col("vec_id") =!= semGone)))
     assert(k4.nonEmpty && k4.keys.forall(_ == (semGone.toString, "stale")), k4.toString)
 
     // ANN families, at ID level (PQ codes are payload — membership is
@@ -1793,11 +1815,11 @@ class OperatorsSpec extends SparkSuite {
     assert(hot.read(spark).where(
       graft.functions.bytes_utf8(col("value")) === lit(graft.core.IndexTombstone.Value))
       .count() > 0)
-    assert(Dedup.bandIndexIdAudit(hot, hotDocs, "doc_id", "text").isEmpty)
+    assert(Dedup.bandIndex("doc_id", "text").idAudit(hot, hotDocs).isEmpty)
 
     // wrong-type guard holds for audits too
     val e = intercept[IllegalArgumentException](
-      Similarity.semIndexIdAudit(band, emb, "vec_id", "embedding", 3))
+      Similarity.semIndex("vec_id", "embedding", 3).idAudit(band, emb))
     assert(e.getMessage.contains("not 'sem-cell'"), e.getMessage)
   }
 
@@ -1830,7 +1852,7 @@ class OperatorsSpec extends SparkSuite {
       .unionByName(Seq((novelIn, "a genuinely novel never indexed document text body"))
         .toDF("doc_id", "text"))
     def audited(sampleMod: Long): Map[String, Set[String]] =
-      Dedup.bandIndexIdAudit(st, record, "doc_id", "text", sampleMod = sampleMod)
+      Dedup.bandIndex("doc_id", "text").idAudit(st, record, sampleMod = sampleMod)
         .select(col("id"), col("kind")).distinct().collect()
         .groupBy(_.getString(1)).view.mapValues(_.map(_.getString(0)).toSet).toMap
     // full audit (sampleMod = 1, the default) sees all three
@@ -1849,7 +1871,7 @@ class OperatorsSpec extends SparkSuite {
     val hashes = (0L until 20L).map(i => (i, i * 37L)).toDF("media_id", "phash")
     val ph = graft.store.DomainStore.create(scratch("ix-audit/sampled-ph"), spec, conf)
     ph.write(Multimodal.phashIndexKv(hashes), 1L)
-    assert(Multimodal.phashIndexIdAudit(ph, hashes, sampleMod = 7L).isEmpty)
+    assert(Multimodal.phashIndex().idAudit(ph, hashes, sampleMod = 7L).isEmpty)
     // ANN wrapper passthrough (ivfIndexContentAudit rides the same
     // engine at ID level): a sampled run over a clean record is clean
     val embS = spark.read.parquet(sf("sf0.001/embeddings.parquet"))
@@ -1863,7 +1885,7 @@ class OperatorsSpec extends SparkSuite {
       ivfS, embS, "vec_id", "embedding", centsS, sampleMod = 5L).isEmpty)
     // nonsense sampleMod fails loud
     val e = intercept[IllegalArgumentException](
-      Dedup.bandIndexIdAudit(st, record, "doc_id", "text", sampleMod = 0L))
+      Dedup.bandIndex("doc_id", "text").idAudit(st, record, sampleMod = 0L))
     assert(e.getMessage.contains("sampleMod"), e.getMessage)
   }
 
@@ -1881,7 +1903,7 @@ class OperatorsSpec extends SparkSuite {
     val removed = docs.where(col("doc_id") === ids(0) || col("doc_id") === ids(1))
     // BEFORE the takedown every targeted entry reports present — and ONLY
     // the targeted ids report (shared buckets never leak other members)
-    val pre = Dedup.bandIndexRemovalAudit(st, removed, "doc_id", "text")
+    val pre = Dedup.bandIndex("doc_id", "text").removalAudit(st, removed)
     val preRows = pre.select(col("id"), col("kind")).distinct().collect()
       .map(r => (r.getString(0), r.getString(1))).toSet
     assert(preRows === Set((ids(0).toString, "present"), (ids(1).toString, "present")),
@@ -1889,12 +1911,12 @@ class OperatorsSpec extends SparkSuite {
     // entry == id for the plain-id band grammar
     assert(pre.where(col("entry") =!= col("id")).isEmpty)
     // after the real takedown the SAME audit certifies clean...
-    Dedup.bandIndexDelete(st, removed, "doc_id", "text", 2L)
-    assert(Dedup.bandIndexRemovalAudit(st, removed, "doc_id", "text").isEmpty)
+    Dedup.bandIndex("doc_id", "text").delete(st, removed, 2L)
+    assert(Dedup.bandIndex("doc_id", "text").removalAudit(st, removed).isEmpty)
     // ...and a never-removed id still reports present (the empty result
     // above is a live certification, not a dead probe)
-    assert(Dedup.bandIndexRemovalAudit(
-        st, docs.where(col("doc_id") === ids(2)), "doc_id", "text")
+    assert(Dedup.bandIndex("doc_id", "text").removalAudit(
+        st, docs.where(col("doc_id") === ids(2)))
       .where(col("kind") === "present").count() > 0)
     // content-addressed caveat, pinned: a DRIFTED takedown certifies
     // clean against its own (drifted) content while the content AS
@@ -1902,10 +1924,10 @@ class OperatorsSpec extends SparkSuite {
     // of record, use idAudit when content is untrusted
     val drifted = Seq((ids(2), "completely different drifted takedown text payload"))
       .toDF("doc_id", "text")
-    Dedup.bandIndexDelete(st, drifted, "doc_id", "text", 3L)
-    assert(Dedup.bandIndexRemovalAudit(st, drifted, "doc_id", "text").isEmpty)
-    assert(Dedup.bandIndexRemovalAudit(
-        st, docs.where(col("doc_id") === ids(2)), "doc_id", "text")
+    Dedup.bandIndex("doc_id", "text").delete(st, drifted, 3L)
+    assert(Dedup.bandIndex("doc_id", "text").removalAudit(st, drifted).isEmpty)
+    assert(Dedup.bandIndex("doc_id", "text").removalAudit(
+        st, docs.where(col("doc_id") === ids(2)))
       .where(col("kind") === "present").count() > 0,
       "the content-as-indexed audit must surface what the drifted takedown missed")
     // a removal mapping to a cap-tombstoned bucket is UNCERTIFIABLE and
@@ -1914,8 +1936,8 @@ class OperatorsSpec extends SparkSuite {
       "shared verbatim by every document here")).toDF("doc_id", "text")
     val hot = graft.store.DomainStore.create(scratch("rm-audit/hot"), spec, conf)
     hot.write(Dedup.bandIndexKv(hotDocs, "doc_id", "text", maxBucket = 2), 1L)
-    val tomb = Dedup.bandIndexRemovalAudit(
-      hot, hotDocs.where(col("doc_id") === 1L), "doc_id", "text")
+    val tomb = Dedup.bandIndex("doc_id", "text").removalAudit(
+      hot, hotDocs.where(col("doc_id") === 1L))
     assert(tomb.where(col("kind") === "tombstoned").count() > 0)
     assert(tomb.where(col("kind") === "present").isEmpty)
     assert(tomb.where(col("entry") =!= lit(graft.core.IndexTombstone.Value)).isEmpty)
@@ -1937,9 +1959,20 @@ class OperatorsSpec extends SparkSuite {
     Similarity.ivfIndexDelete(pq, vRemoved, "vec_id", "embedding", cents, 2L)
     assert(Similarity.ivfIndexRemovalAudit(
       pq, vRemoved, "vec_id", "embedding", cents).isEmpty)
+    // semantic cell family on the same rows: pre-takedown present (only
+    // the targeted id), post clean
+    val semFam = Similarity.semIndex("vec_id", "embedding", 3)
+    val sem = graft.store.DomainStore.create(scratch("rm-audit/sem"), spec, conf)
+    sem.write(Similarity.semIndexKv(emb, "vec_id", "embedding", 3), 1L)
+    val semPre = semFam.removalAudit(sem, vRemoved)
+    assert(semPre.where(col("kind") === "present").count() > 0)
+    assert(semPre.select(col("id")).distinct().collect().map(_.getString(0)).toSet
+      === Set(vGone.toString))
+    semFam.delete(sem, vRemoved, 2L)
+    assert(semFam.removalAudit(sem, vRemoved).isEmpty)
     // wrong-family wiring refused before any probe
     val e = intercept[IllegalArgumentException](
-      Dedup.fpIndexRemovalAudit(st, docs, "doc_id", "text"))
+      Dedup.fpIndex("doc_id", "text").removalAudit(st, docs))
     assert(e.getMessage.contains("not 'fp-anchor'"), e.getMessage)
   }
 
@@ -1967,29 +2000,29 @@ class OperatorsSpec extends SparkSuite {
     // deletion (the removed ids' unshared buckets)
     val st = graft.store.DomainStore.create(scratch("upd-band"), spec, conf)
     st.write(Dedup.bandIndexKv(docs, "doc_id", "text"), 1L)
-    Dedup.bandIndexUpdate(st, added, removed, "doc_id", "text", 2L, linked = true)
+    Dedup.bandIndex("doc_id", "text").update(st, added, removed, 2L, linked = true)
     assert(st.latestVersion === 2L)
     val rebuilt = graft.store.DomainStore.create(scratch("upd-band-rb"), spec, conf)
     rebuilt.write(
       Dedup.bandIndexKv(survivors.unionByName(added), "doc_id", "text"), 1L)
     assert(kvPairs(st) === kvPairs(rebuilt))
-    assert(Dedup.bandIndexRemovalAudit(st, removed, "doc_id", "text").isEmpty)
+    assert(Dedup.bandIndex("doc_id", "text").removalAudit(st, removed).isEmpty)
 
     // wrapper lockstep: update(adds, none) == upsert, update(none,
     // removed) == delete — the three merges can never drift apart
     val a1 = graft.store.DomainStore.create(scratch("upd-a1"), spec, conf)
     a1.write(Dedup.bandIndexKv(docs, "doc_id", "text"), 1L)
-    Dedup.bandIndexUpdate(a1, added, added.limit(0), "doc_id", "text", 2L)
+    Dedup.bandIndex("doc_id", "text").update(a1, added, added.limit(0), 2L)
     val a2 = graft.store.DomainStore.create(scratch("upd-a2"), spec, conf)
     a2.write(Dedup.bandIndexKv(docs, "doc_id", "text"), 1L)
-    Dedup.bandIndexUpsert(a2, added, "doc_id", "text", 2L)
+    Dedup.bandIndex("doc_id", "text").upsert(a2, added, 2L)
     assert(kvPairs(a1) === kvPairs(a2))
     val d1 = graft.store.DomainStore.create(scratch("upd-d1"), spec, conf)
     d1.write(Dedup.bandIndexKv(docs, "doc_id", "text"), 1L)
-    Dedup.bandIndexUpdate(d1, added.limit(0), removed, "doc_id", "text", 2L)
+    Dedup.bandIndex("doc_id", "text").update(d1, added.limit(0), removed, 2L)
     val d2 = graft.store.DomainStore.create(scratch("upd-d2"), spec, conf)
     d2.write(Dedup.bandIndexKv(docs, "doc_id", "text"), 1L)
-    Dedup.bandIndexDelete(d2, removed, "doc_id", "text", 2L)
+    Dedup.bandIndex("doc_id", "text").delete(d2, removed, 2L)
     assert(kvPairs(d1) === kvPairs(d2))
 
     // cap semantics both directions: a build-tombstoned bucket CARRIES
@@ -2000,23 +2033,23 @@ class OperatorsSpec extends SparkSuite {
     val hot = graft.store.DomainStore.create(scratch("upd-hot"), spec, conf)
     hot.write(Dedup.bandIndexKv(hotDocs, "doc_id", "text", maxBucket = 2), 1L)
     val hotBefore = kvPairs(hot)
-    Dedup.bandIndexUpdate(hot, hotDocs.limit(0),
-      hotDocs.where(col("doc_id") <= 4L), "doc_id", "text", 2L, maxBucket = 2)
+    Dedup.bandIndex("doc_id", "text", maxBucket = 2).update(hot, hotDocs.limit(0),
+      hotDocs.where(col("doc_id") <= 4L), 2L)
     assert(kvPairs(hot) === hotBefore, "tombstoned buckets must carry through the update")
     // ...and a live bucket pushed past the cap by the adds tombstones,
     // exactly as the rebuild would
     val l1 = graft.store.DomainStore.create(scratch("upd-live1"), spec, conf)
     l1.write(Dedup.bandIndexKv(
       hotDocs.where(col("doc_id") <= 3L), "doc_id", "text", maxBucket = 4), 1L)
-    Dedup.bandIndexUpdate(l1, hotDocs.where(col("doc_id") >= 4L),
-      hotDocs.limit(0), "doc_id", "text", 2L, maxBucket = 4)
+    Dedup.bandIndex("doc_id", "text", maxBucket = 4).update(l1, hotDocs.where(col("doc_id") >= 4L),
+      hotDocs.limit(0), 2L)
     val l2 = graft.store.DomainStore.create(scratch("upd-live2"), spec, conf)
     l2.write(Dedup.bandIndexKv(hotDocs, "doc_id", "text", maxBucket = 4), 1L)
     assert(kvPairs(l1) === kvPairs(l2))
 
     // an id on both sides has no defined final state: loud, pre-publish
     val e = intercept[IllegalArgumentException](
-      Dedup.bandIndexUpdate(st, docs.limit(1), docs.limit(1), "doc_id", "text", 9L))
+      Dedup.bandIndex("doc_id", "text").update(st, docs.limit(1), docs.limit(1), 9L))
     assert(e.getMessage.contains("BOTH"), e.getMessage)
     assert(st.latestVersion === 2L, "the clash must refuse before publishing")
     // INTERSECT matches NULLs null-safely: a null-id clash must print the
@@ -2024,7 +2057,7 @@ class OperatorsSpec extends SparkSuite {
     val nullId = Seq((Option.empty[Long], "null id text body"))
       .toDF("doc_id", "text")
     val eN = intercept[IllegalArgumentException](
-      Dedup.bandIndexUpdate(st, nullId, nullId, "doc_id", "text", 9L))
+      Dedup.bandIndex("doc_id", "text").update(st, nullId, nullId, 9L))
     assert(eN.getMessage.contains("BOTH"), eN.getMessage)
   }
 
@@ -2038,6 +2071,28 @@ class OperatorsSpec extends SparkSuite {
       .map(r => (r.getAs[Array[Byte]](0).toSeq, r.getAs[Array[Byte]](1).toSeq)).toSet
     def messages(t: Throwable): Seq[String] =
       if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
+    // the band test's lockstep pins, per family: update(adds, ∅) ==
+    // upsert and update(∅, removed) == delete, byte for byte, and each
+    // really changed the published index
+    def lockstep(name: String, fam: IndexFamily, built: org.apache.spark.sql.DataFrame,
+        adds: org.apache.spark.sql.DataFrame, rm: org.apache.spark.sql.DataFrame): Unit = {
+      def published(tag: String) = {
+        val st = graft.store.DomainStore.create(scratch(s"upd-fam/$name-$tag"), spec, conf)
+        st.write(built, 1L)
+        st
+      }
+      val base = kvPairs(published("base"))
+      val (u1, u2) = (published("u1"), published("u2"))
+      fam.update(u1, adds, adds.limit(0), 2L)
+      fam.upsert(u2, adds, 2L)
+      assert(kvPairs(u1) === kvPairs(u2), s"$name: update(adds, none) != upsert")
+      assert(kvPairs(u1) !== base, s"$name: the adds changed nothing — vacuous")
+      val (d1, d2) = (published("d1"), published("d2"))
+      fam.update(d1, rm.limit(0), rm, 2L)
+      fam.delete(d2, rm, 2L)
+      assert(kvPairs(d1) === kvPairs(d2), s"$name: update(none, removed) != delete")
+      assert(kvPairs(d1) !== base, s"$name: the removals changed nothing — vacuous")
+    }
 
     // fp family (shared boilerplate run so fingerprints exist)
     val run = "this exact shared boilerplate run is long enough to anchor " +
@@ -2051,13 +2106,16 @@ class OperatorsSpec extends SparkSuite {
     val fp = graft.store.DomainStore.create(scratch("upd-fam/fp"), spec, conf)
     fp.write(Dedup.fpIndexKv(fpDocs, "doc_id", "text",
       minLen = 32, window = 4, modulus = 4), 1L)
-    Dedup.fpIndexUpdate(fp, fpAdds, fpRm, "doc_id", "text", 2L,
-      minLen = 32, window = 4, modulus = 4, linked = true)
+    Dedup.fpIndex("doc_id", "text", minLen = 32, window = 4, modulus = 4)
+      .update(fp, fpAdds, fpRm, 2L, linked = true)
     val fpRb = graft.store.DomainStore.create(scratch("upd-fam/fp-rb"), spec, conf)
     fpRb.write(Dedup.fpIndexKv(
       fpDocs.where(col("doc_id") > 2L).unionByName(fpAdds), "doc_id", "text",
       minLen = 32, window = 4, modulus = 4), 1L)
     assert(kvPairs(fp) === kvPairs(fpRb) && kvPairs(fp).nonEmpty)
+    lockstep("fp", Dedup.fpIndex("doc_id", "text", minLen = 32, window = 4, modulus = 4),
+      Dedup.fpIndexKv(fpDocs, "doc_id", "text", minLen = 32, window = 4, modulus = 4),
+      fpAdds, fpRm)
 
     // phash family: rebuild equality plus the LIVE payload-uniqueness
     // guard (the engine check that is vacuous for plain-id grammars)
@@ -2066,16 +2124,17 @@ class OperatorsSpec extends SparkSuite {
     val phRm = hashes.where(col("media_id") < 5L)
     val ph = graft.store.DomainStore.create(scratch("upd-fam/ph"), spec, conf)
     ph.write(Multimodal.phashIndexKv(hashes), 1L)
-    Multimodal.phashIndexUpdate(ph, phAdds, phRm, 2L)
+    Multimodal.phashIndex().update(ph, phAdds, phRm, 2L)
     val phRb = graft.store.DomainStore.create(scratch("upd-fam/ph-rb"), spec, conf)
     phRb.write(Multimodal.phashIndexKv(
       hashes.where(col("media_id") >= 5L).unionByName(phAdds)), 1L)
     assert(kvPairs(ph) === kvPairs(phRb) && kvPairs(ph).nonEmpty)
+    lockstep("ph", Multimodal.phashIndex(), Multimodal.phashIndexKv(hashes), phAdds, phRm)
     // id 7 is still indexed with phash 259; re-adding it with 260 meets
     // the old entry in every unchanged band's bucket → loud, never a
     // silent stale-payload winner
     val eP = intercept[Exception](
-      Multimodal.phashIndexUpdate(ph,
+      Multimodal.phashIndex().update(ph,
         Seq((7L, 260L)).toDF("media_id", "phash"),
         phAdds.limit(0), 3L))
     assert(messages(eP).exists(_.contains("TWO different payloads")),
@@ -2092,12 +2151,14 @@ class OperatorsSpec extends SparkSuite {
     val semRm = emb.where(col("vec_id") === vids(0) || col("vec_id") === vids(1))
     val sem = graft.store.DomainStore.create(scratch("upd-fam/sem"), spec, conf)
     sem.write(Similarity.semIndexKv(emb, "vec_id", "embedding", 4), 1L)
-    Similarity.semIndexUpdate(sem, semAdds, semRm, "vec_id", "embedding", 4, 2L)
+    Similarity.semIndex("vec_id", "embedding", 4).update(sem, semAdds, semRm, 2L)
     val semRb = graft.store.DomainStore.create(scratch("upd-fam/sem-rb"), spec, conf)
     semRb.write(Similarity.semIndexKv(
       emb.where(col("vec_id") =!= vids(0) && col("vec_id") =!= vids(1))
         .unionByName(semAdds), "vec_id", "embedding", 4), 1L)
     assert(kvPairs(sem) === kvPairs(semRb) && kvPairs(sem).nonEmpty)
+    lockstep("sem", Similarity.semIndex("vec_id", "embedding", 4),
+      Similarity.semIndexKv(emb, "vec_id", "embedding", 4), semAdds, semRm)
   }
 
   test("index type via domain-spec: zero Spark jobs to verify; spec authority overrides") {

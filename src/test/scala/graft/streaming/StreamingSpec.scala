@@ -291,7 +291,8 @@ class StreamingSpec extends SparkSuite {
     bandIndex.write(graft.operators.Dedup.bandIndexKv(
       docs.where(col("doc_id") % 3 === 0), "doc_id", "text"), 1L)
     docs.where(col("doc_id") % 3 === 1).coalesce(1).write.parquet(s"$bandSrc/d0")
-    val q2 = StreamingDedup.growIndexStream(
+    val q2 = StreamingDedup.growStream(
+      graft.operators.Dedup.bandIndex("doc_id", "text"),
       bandIndex, spark.readStream.schema(docs.schema).parquet(s"$bandSrc/*"),
       baseVersion = 1L, checkpointDir = scratch("stream-band-ckpt"), queryName = "band_grow")
     try q2.awaitTermination() finally q2.stop()
@@ -307,7 +308,8 @@ class StreamingSpec extends SparkSuite {
     fpIndex.write(graft.operators.Dedup.fpIndexKv(
       docs.where(col("doc_id") % 3 === 0), "doc_id", "text"), 1L)
     docs.where(col("doc_id") % 3 === 1).coalesce(1).write.parquet(s"$fpSrc/d0")
-    val qFp = StreamingDedup.growFpIndexStream(
+    val qFp = StreamingDedup.growStream(
+      graft.operators.Dedup.fpIndex("doc_id", "text"),
       fpIndex, spark.readStream.schema(docs.schema).parquet(s"$fpSrc/*"),
       baseVersion = 1L, checkpointDir = scratch("stream-fp-ckpt"), queryName = "fp_grow")
     try qFp.awaitTermination() finally qFp.stop()
@@ -331,7 +333,8 @@ class StreamingSpec extends SparkSuite {
     val imgSchema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("media_id", org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("phash", org.apache.spark.sql.types.LongType)))
-    val q3 = StreamingDedup.growImageIndexStream(
+    val q3 = StreamingDedup.growStream(
+      graft.operators.Multimodal.phashIndex(),
       imgIndex, spark.readStream.schema(imgSchema).parquet(s"$imgSrc/*"),
       baseVersion = 1L, checkpointDir = scratch("stream-img-ckpt"), queryName = "img_grow")
     try q3.awaitTermination() finally q3.stop()
@@ -347,9 +350,9 @@ class StreamingSpec extends SparkSuite {
     semIndex.write(graft.operators.Similarity.semIndexKv(
       emb.where(col("vec_id") % 3 === 0), "vec_id", "embedding", 4), 1L)
     emb.where(col("vec_id") % 3 === 1).coalesce(1).write.parquet(s"$semSrc/d0")
-    val q4 = StreamingDedup.growSemIndexStream(
+    val q4 = StreamingDedup.growStream(
+      graft.operators.Similarity.semIndex("vec_id", "embedding", planes = 4),
       semIndex, spark.readStream.schema(emb.schema).parquet(s"$semSrc/*"),
-      "vec_id", "embedding", planes = 4,
       baseVersion = 1L, checkpointDir = scratch("stream-sem-ckpt"), queryName = "sem_grow")
     try q4.awaitTermination() finally q4.stop()
     val semFull = graft.store.DomainStore.create(scratch("stream-sem-full"), spec, conf)
@@ -376,7 +379,8 @@ class StreamingSpec extends SparkSuite {
     val band = graft.store.DomainStore.create(scratch("tk-band-dom"), spec, conf)
     band.write(graft.operators.Dedup.bandIndexKv(docs, "doc_id", "text"), 1L)
     docs.where(col("doc_id") % 3 === 0).coalesce(1).write.parquet(s"$bandSrc/d0")
-    val q1 = StreamingDedup.takedownIndexStream(
+    val q1 = StreamingDedup.takedownStream(
+      graft.operators.Dedup.bandIndex("doc_id", "text"),
       band, spark.readStream.schema(docs.schema).parquet(s"$bandSrc/*"),
       baseVersion = 1L, checkpointDir = scratch("tk-band-ckpt"), queryName = "band_tk",
       linked = true)
@@ -385,8 +389,8 @@ class StreamingSpec extends SparkSuite {
     bandFull.write(graft.operators.Dedup.bandIndexKv(
       docs.where(col("doc_id") % 3 =!= 0), "doc_id", "text"), 1L)
     assert(pairs(band) === pairs(bandFull) && pairs(band).nonEmpty)
-    assert(graft.operators.Dedup.bandIndexRemovalAudit(
-      band, docs.where(col("doc_id") % 3 === 0), "doc_id", "text").isEmpty)
+    assert(graft.operators.Dedup.bandIndex("doc_id", "text").removalAudit(
+      band, docs.where(col("doc_id") % 3 === 0)).isEmpty)
     // the documented version-line composition: a GROW feed picks up at
     // the takedown stream's head (baseVersion = latestVersion, its own
     // checkpoint) — sequential feeds share one version line and the
@@ -395,7 +399,8 @@ class StreamingSpec extends SparkSuite {
     fs.mkdirs(new org.apache.hadoop.fs.Path(grow2Src))
     docs.where(col("doc_id") % 3 === 0 && col("doc_id") % 2 === 0)
       .coalesce(1).write.parquet(s"$grow2Src/d0")
-    val qG = StreamingDedup.growIndexStream(
+    val qG = StreamingDedup.growStream(
+      graft.operators.Dedup.bandIndex("doc_id", "text"),
       band, spark.readStream.schema(docs.schema).parquet(s"$grow2Src/*"),
       baseVersion = band.latestVersion,
       checkpointDir = scratch("tk-band-grow-ckpt"), queryName = "band_regrow",
@@ -412,7 +417,8 @@ class StreamingSpec extends SparkSuite {
     val fp = graft.store.DomainStore.create(scratch("tk-fp-dom"), spec, conf)
     fp.write(graft.operators.Dedup.fpIndexKv(docs, "doc_id", "text"), 1L)
     docs.where(col("doc_id") % 3 === 0).coalesce(1).write.parquet(s"$fpSrc/d0")
-    val qFp = StreamingDedup.takedownFpIndexStream(
+    val qFp = StreamingDedup.takedownStream(
+      graft.operators.Dedup.fpIndex("doc_id", "text"),
       fp, spark.readStream.schema(docs.schema).parquet(s"$fpSrc/*"),
       baseVersion = 1L, checkpointDir = scratch("tk-fp-ckpt"), queryName = "fp_tk")
     try qFp.awaitTermination() finally qFp.stop()
@@ -435,7 +441,8 @@ class StreamingSpec extends SparkSuite {
     val imgSchema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("media_id", org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("phash", org.apache.spark.sql.types.LongType)))
-    val q3 = StreamingDedup.takedownImageIndexStream(
+    val q3 = StreamingDedup.takedownStream(
+      graft.operators.Multimodal.phashIndex(),
       img, spark.readStream.schema(imgSchema).parquet(s"$imgSrc/*"),
       baseVersion = 1L, checkpointDir = scratch("tk-img-ckpt"), queryName = "img_tk")
     try q3.awaitTermination() finally q3.stop()
@@ -443,7 +450,7 @@ class StreamingSpec extends SparkSuite {
     imgFull.write(graft.operators.Multimodal.phashIndexKv(
       hashesOf(docs.where(col("doc_id") % 3 =!= 0).select(col("doc_id")))), 1L)
     assert(pairs(img) === pairs(imgFull) && pairs(img).nonEmpty)
-    assert(graft.operators.Multimodal.phashIndexRemovalAudit(
+    assert(graft.operators.Multimodal.phashIndex().removalAudit(
       img, hashesOf(docs.where(col("doc_id") % 3 === 0).select(col("doc_id")))).isEmpty)
 
     // embedding cell family
@@ -451,9 +458,9 @@ class StreamingSpec extends SparkSuite {
     val sem = graft.store.DomainStore.create(scratch("tk-sem-dom"), spec, conf)
     sem.write(graft.operators.Similarity.semIndexKv(emb, "vec_id", "embedding", 4), 1L)
     emb.where(col("vec_id") % 3 === 0).coalesce(1).write.parquet(s"$semSrc/d0")
-    val q4 = StreamingDedup.takedownSemIndexStream(
+    val q4 = StreamingDedup.takedownStream(
+      graft.operators.Similarity.semIndex("vec_id", "embedding", planes = 4),
       sem, spark.readStream.schema(emb.schema).parquet(s"$semSrc/*"),
-      "vec_id", "embedding", planes = 4,
       baseVersion = 1L, checkpointDir = scratch("tk-sem-ckpt"), queryName = "sem_tk")
     try q4.awaitTermination() finally q4.stop()
     val semFull = graft.store.DomainStore.create(scratch("tk-sem-full"), spec, conf)
