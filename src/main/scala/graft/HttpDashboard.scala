@@ -18,8 +18,11 @@ import graft.store.{KvDomainReader, ServedDomainStatus}
  *  - `GET /domain/<name>`       — HTML: spec, versions, per-shard table
  *  - `GET /status.json`         — the census as JSON (machine-readable)
  *  - `GET /domain/<name>.json`  — per-domain detail as JSON
- *  - `GET /metrics.json`        — the socket server's monotonic op
- *                                 counters (what a scraper polls);
+ *  - `GET /metrics.json`        — the socket server's op counters,
+ *                                 per-op latency histograms and kvz
+ *                                 block-cache counters
+ *                                 ([[graft.store.KvServer.metricsSnapshot]],
+ *                                 what a scraper polls);
  *                                 `?window=SECONDS` adds the in-daemon
  *                                 history samples inside the window
  *                                 (bounded ring, one sampler thread) —

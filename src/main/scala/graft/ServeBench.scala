@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.core.{DomainSpec, Sessions}
-import graft.store.{DomainStore, KvDomainReader, KvServer, RemoteKvReader}
+import graft.store.{DomainStore, KvDomainReader, KvServer, KvzBlockCache, RemoteKvReader}
 
 /**
  * Serving-latency micro-bench: [[RemoteKvReader.multiGet]] over the
@@ -17,7 +17,11 @@ import graft.store.{DomainStore, KvDomainReader, KvServer, RemoteKvReader}
  *  - COLD: one timed batch on a freshly-opened reader+connection (pays
  *    TCP setup, shard-index loads, page-cache-cold file reads);
  *  - WARM: rounds of seeded-random batches until ≥2 s of wall clock,
- *    reported as keys/s and ms/batch (median across rounds).
+ *    reported as keys/s and ms/batch (median across rounds), plus the
+ *    server's MULTI_GET service-time p50/p99/p999 over those rounds
+ *    (upper bounds of its log2 histogram buckets, [[KvServer.quantileNs]])
+ *    and the kvz block cache's hit rate over them (null when no block
+ *    was loaded: kv-sorted shards never touch the cache).
  *
  * The domain builds once into `target/serve-bench/<fmt>` (Spark job,
  * idempotent — a rerun reuses the published version) and serving is
@@ -55,7 +59,13 @@ object ServeBench {
   }
 
   private final case class Res(
-      fmt: String, batch: Int, coldMs: Double, warmMsPerBatch: Double, keysPerSec: Long)
+      fmt: String, batch: Int, coldMs: Double, warmMsPerBatch: Double, keysPerSec: Long,
+      serverUs: Seq[Double], hitRate: Option[Double])
+
+  private def cacheCounts(): (Long, Long) = {
+    val m = KvzBlockCache.Shared.metrics.toMap
+    (m("kvz_block_cache.hits"), m("kvz_block_cache.misses"))
+  }
 
   private def timeBatches(
       remote: RemoteKvReader, rnd: scala.util.Random, numKeys: Long, batch: Int): Double = {
@@ -92,26 +102,39 @@ object ServeBench {
           val cold = timeBatches(remote, rnd, numKeys, batch)
           // settle: a couple of unmeasured rounds after the cold one
           (1 to 2).foreach(_ => timeBatches(remote, rnd, numKeys, batch))
+          val lat0 = server.latencyCounts("multi_get")
+          val (hits0, misses0) = cacheCounts()
           val times = scala.collection.mutable.ArrayBuffer.empty[Double]
           val until = System.nanoTime() + 2e9.toLong
           while (System.nanoTime() < until || times.size < 5)
             times += timeBatches(remote, rnd, numKeys, batch)
           val sorted = times.sorted
           val median = sorted(sorted.size / 2)
-          Res(fmt, batch, cold, median, (batch / (median / 1e3)).toLong)
+          val lat = server.latencyCounts("multi_get").zip(lat0).map { case (a, b) => a - b }
+          val (hits1, misses1) = cacheCounts()
+          val loads = (hits1 - hits0) + (misses1 - misses0)
+          Res(fmt, batch, cold, median, (batch / (median / 1e3)).toLong,
+            Seq(0.5, 0.99, 0.999).map(q => KvServer.quantileNs(lat, q) / 1e3),
+            if (loads == 0) None else Some((hits1 - hits0).toDouble / loads))
         } finally {
           remote.close(); server.close(); local.close()
         }
       }
     }
 
-    println(f"${"format"}%-12s ${"batch"}%7s ${"cold ms"}%9s ${"warm ms/batch"}%14s ${"keys/s"}%10s")
+    println(f"${"format"}%-12s ${"batch"}%7s ${"cold ms"}%9s ${"warm ms/batch"}%14s ${"keys/s"}%10s" +
+      f" ${"p50 us"}%9s ${"p99 us"}%9s ${"p999 us"}%9s ${"hit rate"}%9s")
     results.foreach { r =>
-      println(f"${r.fmt}%-12s ${r.batch}%7d ${r.coldMs}%9.2f ${r.warmMsPerBatch}%14.3f ${r.keysPerSec}%10d")
+      println(f"${r.fmt}%-12s ${r.batch}%7d ${r.coldMs}%9.2f ${r.warmMsPerBatch}%14.3f ${r.keysPerSec}%10d" +
+        f" ${r.serverUs(0)}%9.1f ${r.serverUs(1)}%9.1f ${r.serverUs(2)}%9.1f" +
+        f" ${r.hitRate.fold("-")(h => f"$h%.4f")}%9s")
     }
     val json = results.map(r =>
       s"""{"fmt":"${r.fmt}","batch":${r.batch},"cold_ms":${f"${r.coldMs}%.2f"},""" +
-      s""""warm_ms_per_batch":${f"${r.warmMsPerBatch}%.3f"},"keys_per_sec":${r.keysPerSec}}""")
+      s""""warm_ms_per_batch":${f"${r.warmMsPerBatch}%.3f"},"keys_per_sec":${r.keysPerSec},""" +
+      s""""p50_us":${f"${r.serverUs(0)}%.1f"},"p99_us":${f"${r.serverUs(1)}%.1f"},""" +
+      s""""p999_us":${f"${r.serverUs(2)}%.1f"},""" +
+      s""""block_cache_hit_rate":${r.hitRate.fold("null")(h => f"$h%.4f")}}""")
       .mkString("[", ",", "]")
     val out = s"""{"bench":"serve","num_keys":$numKeys,"value_len":$valueLen,"cells":$json}"""
     println(out)

@@ -266,8 +266,10 @@ class DomainStore(val root: Path, val spec: DomainSpec, conf: Configuration) {
     * cache — `persistence_opts` in DomainSpec.java:28-30) applied to the
     * compressed engine: `block-size` = raw bytes per Deflate block
     * (default [[KvzFile.DefaultBlockSize]]; smaller → cheaper point
-    * lookups, larger → better ratio for scans). Validated at store
-    * construction so a typo fails at open, not mid-publish. */
+    * lookups that miss the shared decoded-block cache ([[KvzBlockCache]]
+    * — a miss inflates one whole block) and finer cache granularity,
+    * larger → better ratio for scans). Validated at store construction
+    * so a typo fails at open, not mid-publish. */
   private val kvzBlockSize: Int = spec.persistenceOptions.get("block-size") match {
     case _ if format != "kvz" => KvzFile.DefaultBlockSize // datasource opts pass through untouched
     case None => KvzFile.DefaultBlockSize

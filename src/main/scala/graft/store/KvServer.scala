@@ -56,8 +56,10 @@ import java.util.concurrent.atomic.AtomicBoolean
  *    drains a duplicate run past the caps; a run longer than the page
  *    errors loud) — and pages certify versions like MULTI_GET
  *  - 9 METRICS:    (domain ignored)  →  n int, n × (name UTF, value
- *    long) — monotonic op counters (`<op>.requests`/`.errors`, volume
- *    counts, connection lifecycle), never reset server-side
+ *    long) — op counters (`<op>.requests`/`.errors`, volume counts,
+ *    connection lifecycle), per-op service-time histograms and the kvz
+ *    block cache's counters ([[metricsSnapshot]]), never reset
+ *    server-side
  *  - 10 META:      —  →  numShards int, servedVersion long (-1 = bare
  *    subset), latestPublished long (-1 = none/unknown), format UTF,
  *    shardScheme UTF, indexer UTF, indexType UTF ("none" = not a
@@ -164,15 +166,40 @@ final class KvServer(
     counters.computeIfAbsent(name, _ => new java.util.concurrent.atomic.LongAdder())
       .add(by)
 
-  /** Monotonic counter snapshot (sorted by name): per-op `<op>.requests`
-    * / `<op>.errors`, `multi_get.keys` / `range.records` volume counts,
-    * and connection lifecycle (`connections.accepted/rejected/live`,
-    * `frame_violations`). The ops surface a deployer scrapes; also
-    * served over the wire (METRICS op) and on the HTTP dashboard. */
+  // per-op service time (request drained -> response flushed): one
+  // fixed log2-bucketed histogram per op, recorded with one nanoTime pair
+  private val latencies = new ConcurrentHashMap[String, KvServer.LatencyHistogram]()
+
+  /** Bucket counts of `op`'s service-time histogram (see
+    * [[KvServer.LatencyHistogram]]); all zero before its first request. */
+  def latencyCounts(op: String): Array[Long] =
+    Option(latencies.get(op)).fold(new Array[Long](KvServer.LatencyBuckets))(_.counts)
+
+  /** Counter snapshot (sorted by name): per-op `<op>.requests` /
+    * `<op>.errors`, `multi_get.keys` / `range.records` volume counts,
+    * connection lifecycle (`connections.accepted/rejected/live`,
+    * `frame_violations`), per-op service-time histograms
+    * (`<op>.latency_ns.lt_<2^k>` = requests that took [2^(k-1), 2^k) ns,
+    * non-empty buckets only, plus the gauges `<op>.latency_ns.p50` /
+    * `.p99` / `.p999` = the upper bound of the bucket holding that
+    * quantile, over the server's lifetime) and the JVM-wide kvz block
+    * cache (`kvz_block_cache.hits/misses/evictions/bytes`). Everything
+    * but `connections.live`, the quantiles and the cache's `bytes` is
+    * monotonic. The ops surface a deployer scrapes; also served over the
+    * wire (METRICS op) and on the HTTP dashboard. */
   def metricsSnapshot(): Seq[(String, Long)] = {
     import scala.jdk.CollectionConverters._
-    (counters.asScala.toSeq.map { case (k, v) => (k, v.sum()) } :+
-      ("connections.live" -> conns.size().toLong)).sortBy(_._1)
+    val latency = latencies.asScala.toSeq.flatMap { case (op, h) =>
+      val counts = h.counts
+      counts.indices.collect {
+        case i if counts(i) > 0 => s"$op.latency_ns.lt_${KvServer.bucketUpperNs(i)}" -> counts(i)
+      } ++ Seq("p50" -> 0.5, "p99" -> 0.99, "p999" -> 0.999).map { case (n, q) =>
+        s"$op.latency_ns.$n" -> KvServer.quantileNs(counts, q)
+      }
+    }
+    (counters.asScala.toSeq.map { case (k, v) => (k, v.sum()) } ++ latency ++
+      KvzBlockCache.Shared.metrics ++
+      Seq("connections.live" -> conns.size().toLong)).sortBy(_._1)
   }
 
   /** The bound port (useful with port = 0: ephemeral). */
@@ -266,6 +293,7 @@ final class KvServer(
               return
           }
         bump(s"${KvServer.opName(op)}.requests")
+        val started = System.nanoTime()
         // ---- phase 2: execute and respond; failures become error
         // frames and the (aligned) connection keeps serving. Each op
         // computes its result BEFORE the first response byte, so an
@@ -431,6 +459,8 @@ final class KvServer(
             writeError(out, e.getClass.getName, Option(e.getMessage).getOrElse(""))
         }
         out.flush()
+        latencies.computeIfAbsent(KvServer.opName(op), _ => new KvServer.LatencyHistogram)
+          .record(System.nanoTime() - started)
       }
     } catch {
       case _: IOException => // transport died; the client will fail over
@@ -543,6 +573,39 @@ object KvServer {
     case OpMetrics => "metrics"
     case OpMeta => "meta"
     case other => s"op_$other"
+  }
+
+  /** Buckets per latency histogram: bucket k counts samples in
+    * [2^(k-1), 2^k) ns (bucket 0: under 1 ns), the last one everything
+    * from 2^46 ns (~20 h) up. */
+  val LatencyBuckets: Int = 48
+
+  /** Exclusive upper bound of latency bucket `k`, in ns. */
+  def bucketUpperNs(k: Int): Long = 1L << k
+
+  /** The upper bound (ns) of the bucket holding quantile `q` of the
+    * histogram `counts`; 0 when it is empty. At most 2x above the true
+    * value, by the bucket width. */
+  def quantileNs(counts: Array[Long], q: Double): Long = {
+    val total = counts.sum
+    if (total == 0L) 0L
+    else {
+      val rank = math.max(1L, math.ceil(q * total).toLong)
+      var seen = 0L
+      var k = 0
+      while (k < counts.length - 1 && seen + counts(k) < rank) { seen += counts(k); k += 1 }
+      bucketUpperNs(k)
+    }
+  }
+
+  /** A fixed log2-bucketed latency histogram: one LongAdder per bucket,
+    * so recording is contention-free and memory is bounded. */
+  private[store] final class LatencyHistogram {
+    private val buckets = Array.fill(LatencyBuckets)(new java.util.concurrent.atomic.LongAdder)
+    def record(ns: Long): Unit =
+      buckets(math.min(LatencyBuckets - 1, 64 - java.lang.Long.numberOfLeadingZeros(math.max(ns, 0L))))
+        .increment()
+    def counts: Array[Long] = buckets.map(_.sum())
   }
 
   private[store] final case class RangeRequest(

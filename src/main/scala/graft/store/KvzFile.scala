@@ -29,17 +29,23 @@ import org.apache.hadoop.fs.FSDataInputStream
  *
  * The whole block index is loaded at open — the SSTable discipline:
  * at [[DefaultBlockSize]] raw bytes per block an 8 GB shard carries
- * ~64k index entries (a few MB), far under any serving heap. Every read
- * then needs at most ONE block decompress:
+ * ~64k index entries (a few MB), far under any serving heap. Every block
+ * a reader needs comes from the JVM-wide decoded-block cache
+ * ([[KvzBlockCache]], keyed by reader instance and block, dropped at
+ * [[Reader.close]]); a miss preads, inflates, checksum-verifies and
+ * frames the block (its record offsets, checked against the record
+ * count the index promises) before it enters the cache:
  *  - [[Reader.lookup]]: binary-search the index's first-keys for the one
- *    candidate block, positioned-read + inflate it, scan in-block with
- *    early exit (sorted). A one-block cache makes key-sorted batch
- *    probes (multiGet sorts its keys) decompress each block once.
- *  - [[Reader.range]]: binary-search to the start block, then stream
- *    blocks forward, stopping at the first key past the upper bound —
- *    I/O proportional to the range in block granularity.
- *  - [[Reader.iterator]]: one positioned read per block (compressed
- *    sequential I/O ≈ compressed file size).
+ *    candidate block, then binary-search its record offsets comparing
+ *    keys in place; only the returned value is copied. A hit costs no
+ *    file read and no inflate.
+ *  - [[Reader.keyAt]]: the index's first-record numbers pick the block,
+ *    the offsets the record.
+ *  - [[Reader.range]]: binary-search to the start block and within it,
+ *    then stream blocks forward, stopping at the first key past the upper
+ *    bound — I/O proportional to the range in block granularity.
+ *  - [[Reader.iterator]]: one positioned read per missed block
+ *    (compressed sequential I/O ≈ compressed file size).
  * Keys-only iteration cannot skip value I/O (values share the block's
  * compressed unit) but still never allocates value arrays; kv-sorted
  * remains the engine of choice when key passes over huge values
@@ -47,8 +53,9 @@ import org.apache.hadoop.fs.FSDataInputStream
  *
  * Key order, null values, duplicate keys, and the concurrency contract
  * all match [[KvFile]]: unsigned-lexicographic sort enforced on write;
- * lookups are positioned-read-only and safe concurrently (the block
- * cache is a benign-race volatile — worst case a duplicate decompress);
+ * lookups are positioned-read-only and safe concurrently (the cache
+ * holds no lock while decoding — worst case two threads that miss the
+ * same block both decompress it);
  * the sequential iterators here use positioned reads too, so NO seek-
  * pointer ownership applies (any number may interleave).
  *
@@ -64,10 +71,53 @@ object KvzFile {
 
   /** Raw (uncompressed) bytes per block before a flush. 128 KB: big
     * enough that Deflate reaches its ratio and the per-block index stays
-    * tiny, small enough that a point lookup inflates ~one TLB-friendly
-    * buffer (LevelDB ships 4 KB blocks for pure point loads; this format
-    * serves scans and ranges off the same file, so blocks sit larger). */
+    * tiny (LevelDB ships 4 KB blocks for pure point loads; this format
+    * serves scans and ranges off the same file, so blocks sit larger).
+    * A point read that misses the decoded-block cache ([[KvzBlockCache]])
+    * inflates one whole block, ~0.7 ms of CPU at this size; a hit
+    * inflates nothing, so hot blocks cost their size in cache budget
+    * rather than an inflate per get. */
   val DefaultBlockSize: Int = 128 * 1024
+
+  /** One decoded block: its raw records and the start offset of each,
+    * found once when the block is decoded, so a probe binary-searches
+    * keys in place and copies only what it returns. `owner` names the
+    * file it came from. */
+  final class Block private[store] (val owner: String, raw: Array[Byte], offsets: Array[Int]) {
+    def count: Int = offsets.length
+
+    /** Heap held: the raw bytes, the offsets, object headers. */
+    val bytes: Long = raw.length + 4L * offsets.length + 64
+
+    private def keyEnd(i: Int): Int = offsets(i) + 8 + intAt(raw, offsets(i))
+
+    def key(i: Int): Array[Byte] = java.util.Arrays.copyOfRange(raw, offsets(i) + 8, keyEnd(i))
+
+    /** The i-th value; null for a null value. */
+    def value(i: Int): Array[Byte] = {
+      val valLen = intAt(raw, offsets(i) + 4)
+      if (valLen < 0) null
+      else { val start = keyEnd(i); java.util.Arrays.copyOfRange(raw, start, start + valLen) }
+    }
+
+    def compareKey(i: Int, key: Array[Byte]): Int =
+      java.util.Arrays.compareUnsigned(raw, offsets(i) + 8, keyEnd(i), key, 0, key.length)
+
+    /** Index of the first record whose key is >= `key` (`count` if none):
+      * with duplicate keys, the first copy. */
+    def lowerBound(key: Array[Byte]): Int = {
+      var lo = 0
+      var hi = count
+      while (lo < hi) {
+        val mid = (lo + hi) >>> 1
+        if (compareKey(mid, key) < 0) lo = mid + 1 else hi = mid
+      }
+      lo
+    }
+  }
+
+  private def intAt(b: Array[Byte], o: Int): Int =
+    ((b(o) & 0xff) << 24) | ((b(o + 1) & 0xff) << 16) | ((b(o + 2) & 0xff) << 8) | (b(o + 3) & 0xff)
 
   /** Stream `rows` (sorted by key, unsigned-lexicographic) into `out` as
     * one kvz file. Returns the record count. Single pass; buffers one
@@ -147,7 +197,11 @@ object KvzFile {
 
   /** One open kvz file. All reads are positioned; see class doc for the
     * concurrency contract (everything may interleave). */
-  final class Reader(in: FSDataInputStream, fileLen: Long, name: String = "<stream>")
+  final class Reader(
+      in: FSDataInputStream,
+      fileLen: Long,
+      name: String = "<stream>",
+      cache: KvzBlockCache = KvzBlockCache.Shared)
       extends ShardReader {
     require(fileLen >= 4L + TrailerLen, s"$name: kvz file too short ($fileLen bytes)")
 
@@ -250,13 +304,23 @@ object KvzFile {
       * [[KvFile.count]] was taught to avoid). */
     override def concurrentIterators: Boolean = true
 
-    // Benign-race one-block cache: concurrent lookups may both miss and
-    // both decompress — correct either way, and key-sorted batches hit.
-    @volatile private var cached: (Int, Array[Byte]) = null
+    // this reader's half of every block-cache key: a reopened file (even
+    // one rewritten at the same path) never shares entries with this one
+    private val cacheId = KvzBlockCache.nextReaderId()
+    @volatile private var closed = false
 
-    private def loadBlock(b: Int): Array[Byte] = {
-      val c = cached
-      if (c != null && c._1 == b) return c._2
+    /** Block `b`, from the shared cache or decoded (and then cached). */
+    private def block(b: Int): Block = {
+      val hit = cache.get(cacheId, b)
+      if (hit != null) return hit
+      val decoded = decode(b)
+      cache.put(cacheId, b, decoded)
+      if (closed) cache.drop(cacheId) // a put racing close() must not outlive it
+      decoded
+    }
+
+    /** Read, inflate and checksum-verify block `b`, then frame its records. */
+    private def decode(b: Int): Block = {
       val comp = new Array[Byte](blockCompLens(b))
       in.readFully(blockOffsets(b), comp)
       val raw = new Array[Byte](blockRawLens(b))
@@ -297,8 +361,39 @@ object KvzFile {
         case e: java.util.zip.DataFormatException =>
           throw new IllegalArgumentException(s"$name: corrupt GKZ1 block $b (bad deflate data)", e)
       } finally inf.end()
-      cached = (b, raw)
-      raw
+      new Block(name, raw, recordOffsets(b, raw))
+    }
+
+    /** Start offset of each record in block `b`'s raw bytes. The checksum
+      * vouches only for what the writer wrote, so the framing is checked
+      * too: every length fits the block, the walk ends exactly at rawLen,
+      * and the record count is the one the index promises. */
+    private def recordOffsets(b: Int, raw: Array[Byte]): Array[Int] = {
+      def corrupt(what: String): Nothing =
+        throw new IllegalArgumentException(s"$name: corrupt GKZ1 block $b ($what)")
+      val n = (if (b + 1 < blockCount) blockFirstRecords(b + 1) else recordCount) - blockFirstRecords(b)
+      // every record takes at least its 8 length bytes
+      if (n > raw.length / 8)
+        corrupt(s"index promises $n records, rawLen=${raw.length} holds at most ${raw.length / 8}")
+      val offsets = new Array[Int](n.toInt)
+      var off = 0
+      var i = 0
+      while (i < offsets.length) {
+        if (raw.length - off < 8)
+          corrupt(s"record $i of $n starts at $off, past rawLen=${raw.length}")
+        val keyLen = intAt(raw, off)
+        val valLen = intAt(raw, off + 4)
+        val room = raw.length - off - 8
+        if (keyLen < 0 || keyLen > room)
+          corrupt(s"record $i at $off: keyLen=$keyLen overruns the block ($room bytes left)")
+        if (valLen < -1 || valLen > room - keyLen)
+          corrupt(s"record $i at $off: valLen=$valLen overruns the block (${room - keyLen} bytes left)")
+        offsets(i) = off
+        off += 8 + keyLen + math.max(valLen, 0)
+        i += 1
+      }
+      if (off != raw.length) corrupt(s"$n records end at $off, rawLen=${raw.length}")
+      offsets
     }
 
     /** Index of the LAST block whose firstKey <= key; -1 if key precedes
@@ -337,39 +432,17 @@ object KvzFile {
       ans
     }
 
-    /** Records of one decompressed block: (key, valLen, valueStart, raw). */
-    private def blockRecords(raw: Array[Byte]): Iterator[(Array[Byte], Int, Int)] =
-      new Iterator[(Array[Byte], Int, Int)] {
-        private var off = 0
-        def hasNext: Boolean = off < raw.length
-        def next(): (Array[Byte], Int, Int) = {
-          val bb = ByteBuffer.wrap(raw, off, raw.length - off)
-          val keyLen = bb.getInt
-          val valLen = bb.getInt
-          val k = new Array[Byte](keyLen)
-          bb.get(k)
-          val valueStart = off + 8 + keyLen
-          off = valueStart + math.max(valLen, 0)
-          (k, valLen, valueStart)
-        }
-      }
-
-    private def valueOf(raw: Array[Byte], valLen: Int, valueStart: Int): Array[Byte] =
-      if (valLen < 0) null
-      else java.util.Arrays.copyOfRange(raw, valueStart, valueStart + valLen)
+    /** Records of `blk` from record `from` on (values null unless
+      * `withValues`). */
+    private def records(blk: Block, from: Int, withValues: Boolean): Iterator[(Array[Byte], Array[Byte])] =
+      Iterator.range(from, blk.count).map(i => (blk.key(i), if (withValues) blk.value(i) else null))
 
     def lookup(key: Array[Byte]): Option[Array[Byte]] = {
       val b = blockFor(key)
       if (b < 0) return None
-      val raw = loadBlock(b)
-      val it = blockRecords(raw)
-      while (it.hasNext) {
-        val (k, valLen, valueStart) = it.next()
-        val cmp = java.util.Arrays.compareUnsigned(k, key)
-        if (cmp == 0) return Some(valueOf(raw, valLen, valueStart))
-        if (cmp > 0) return None // sorted: past it
-      }
-      None
+      val blk = block(b)
+      val i = blk.lowerBound(key)
+      if (i < blk.count && blk.compareKey(i, key) == 0) Some(blk.value(i)) else None
     }
 
     def keyAt(i: Long): Array[Byte] = {
@@ -382,25 +455,16 @@ object KvzFile {
         val mid = (lo + hi) >>> 1
         if (blockFirstRecords(mid) <= i) { b = mid; lo = mid + 1 } else hi = mid - 1
       }
-      val it = blockRecords(loadBlock(b))
-      var at = blockFirstRecords(b)
-      while (true) {
-        val (k, _, _) = it.next()
-        if (at == i) return k
-        at += 1
-      }
-      throw new IllegalStateException("unreachable")
+      block(b).key((i - blockFirstRecords(b)).toInt)
     }
 
     def iterator: Iterator[(Array[Byte], Array[Byte])] =
-      (0 until blockCount).iterator.flatMap { b =>
-        val raw = loadBlock(b)
-        blockRecords(raw).map { case (k, valLen, valueStart) => (k, valueOf(raw, valLen, valueStart)) }
-      }
+      Iterator.range(0, blockCount).flatMap(b => records(block(b), 0, withValues = true))
 
     def keysIterator: Iterator[Array[Byte]] =
-      (0 until blockCount).iterator.flatMap { b =>
-        blockRecords(loadBlock(b)).map(_._1)
+      Iterator.range(0, blockCount).flatMap { b =>
+        val blk = block(b)
+        Iterator.range(0, blk.count).map(blk.key)
       }
 
     def range(
@@ -411,12 +475,11 @@ object KvzFile {
         withValues: Boolean = true): Iterator[(Array[Byte], Array[Byte])] = {
       if (blockCount == 0) return Iterator.empty
       val startBlock = from.fold(0)(rangeStartBlock)
-      (startBlock until blockCount).iterator
+      Iterator.range(startBlock, blockCount)
         .flatMap { b =>
-          val raw = loadBlock(b)
-          blockRecords(raw).map { case (k, valLen, valueStart) =>
-            (k, if (withValues) valueOf(raw, valLen, valueStart) else null)
-          }
+          val blk = block(b)
+          // the start block skips its records below the bound in place
+          records(blk, if (b == startBlock) from.fold(0)(blk.lowerBound) else 0, withValues)
         }
         .dropWhile { case (k, _) =>
           from.exists { bnd =>
@@ -432,6 +495,11 @@ object KvzFile {
         }
     }
 
-    def close(): Unit = in.close()
+    /** Close the file and drop this reader's cached blocks. */
+    def close(): Unit = {
+      closed = true
+      try in.close()
+      finally cache.drop(cacheId)
+    }
   }
 }

@@ -296,6 +296,68 @@ class KvzFileSpec extends AnyFunSuite {
     } finally r.close()
   }
 
+  test("a block that inflates and passes ADLER32 but frames badly fails named, never unnamed") {
+    // records a000..a009, hand-deflated into one block behind a valid
+    // zlib wrapper (so the checksum vouches for the bad lengths)
+    val recs = (0 until 10).map(i => f"a$i%03d".getBytes("UTF-8") -> s"value-$i".getBytes("UTF-8"))
+    def rawBlock(keyLen0: Int, valLen0: Int): Array[Byte] = {
+      val bb = java.nio.ByteBuffer.allocate(recs.map { case (k, v) => 8 + k.length + v.length }.sum)
+      recs.zipWithIndex.foreach { case ((k, v), i) =>
+        bb.putInt(if (i == 0) keyLen0 else k.length).putInt(if (i == 0) valLen0 else v.length)
+        bb.put(k).put(v)
+      }
+      bb.array()
+    }
+    def craft(name: String, raw: Array[Byte], recordCount: Long): Path = {
+      val d = new java.util.zip.Deflater(java.util.zip.Deflater.BEST_SPEED)
+      d.setInput(raw); d.finish()
+      val buf = new Array[Byte](raw.length + 64)
+      val compLen = d.deflate(buf)
+      d.end()
+      val first = recs.head._1
+      val bb = java.nio.ByteBuffer.allocate(4 + compLen + 28 + first.length + 28)
+      bb.put(KvzFile.Magic).put(buf, 0, compLen)
+      bb.putLong(4L).putLong(0L).putInt(raw.length).putInt(compLen).putInt(first.length).put(first)
+      bb.putLong(4L + compLen).putLong(1L).putLong(recordCount).put(KvzFile.Magic)
+      val p = scratchFile(name)
+      val fs = p.getFileSystem(conf)
+      fs.mkdirs(p.getParent)
+      val out = fs.create(p, true)
+      try out.write(bb.array()) finally out.close()
+      p
+    }
+    val k0 = recs.head._1.length
+    val v0 = recs.head._2.length
+    // control: the same crafting with honest lengths reads back
+    val okP = craft("framed-ok.kv", rawBlock(k0, v0), recs.size)
+    val ok = KvFile.open(okP.getFileSystem(conf), okP)
+    try {
+      assert(ok.lookup("a004".getBytes("UTF-8")).map(new String(_, "UTF-8")) === Some("value-4"))
+      assert(ok.iterator.size === recs.size)
+    } finally ok.close()
+    Seq(
+      ("keylen-overrun.kv", rawBlock(1 << 20, v0), recs.size.toLong, "keyLen=1048576"),
+      ("keylen-negative.kv", rawBlock(-5, v0), recs.size.toLong, "keyLen=-5"),
+      ("vallen-overrun.kv", rawBlock(k0, Int.MaxValue), recs.size.toLong, s"valLen=${Int.MaxValue}"),
+      ("vallen-negative.kv", rawBlock(k0, -2), recs.size.toLong, "valLen=-2"),
+      // the index promises one record more, or one fewer, than the block holds
+      ("count-short.kv", rawBlock(k0, v0), recs.size + 1L, "past rawLen"),
+      ("count-long.kv", rawBlock(k0, v0), recs.size - 1L, "records end at")
+    ).foreach { case (name, raw, count, detail) =>
+      val p = craft(name, raw, count)
+      val r = KvFile.open(p.getFileSystem(conf), p)
+      try {
+        Seq[() => Any](
+          () => r.lookup("a004".getBytes("UTF-8")), () => r.iterator.toVector, () => r.keyAt(0L)
+        ).foreach { read =>
+          val e = intercept[IllegalArgumentException](read())
+          assert(e.getMessage.startsWith(s"$p: corrupt GKZ1 block 0 ("), e.getMessage)
+          assert(e.getMessage.contains(detail), e.getMessage)
+        }
+      } finally r.close()
+    }
+  }
+
   test("unsorted input and null keys are rejected at write time") {
     val p = scratchFile("unsorted.kv")
     val e = intercept[IllegalArgumentException](writeFile(p, Seq(

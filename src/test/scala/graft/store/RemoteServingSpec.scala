@@ -488,6 +488,33 @@ class RemoteServingSpec extends SparkSuite {
     }
   }
 
+  test("metrics: per-op latency histograms and kvz block-cache counters over the wire") {
+    val store = DomainStore.create(
+      scratch("remote-metrics-kvz"), DomainSpec(2, persistenceFormat = DomainSpec.KvSortedZ), conf)
+    store.write(kvDf((0 until 200).map(i => s"zk$i" -> s"zv$i")), 1L)
+    val local = KvDomainReader.open(store.root.toString, conf)
+    val server = new KvServer(Map("users" -> local))
+    val remote = new RemoteKvReader("127.0.0.1", server.boundPort, "users")
+    try {
+      val base = remote.metrics()
+      assert(remote.get(utf8("zk7")).map(new String(_, "UTF-8")) === Some("zv7"))
+      assert(remote.get(utf8("zk7")).map(new String(_, "UTF-8")) === Some("zv7"))
+      val m = remote.metrics()
+      // the second get of the same key finds its block decoded
+      assert(m("kvz_block_cache.hits") > base("kvz_block_cache.hits"))
+      Seq("misses", "evictions", "bytes").foreach(c => assert(m.contains(s"kvz_block_cache.$c"), c))
+      // two gets in the multi_get histogram: bucket counts sum to its
+      // request count, and the quantiles are bucket bounds in order
+      val buckets = m.collect { case (k, v) if k.startsWith("multi_get.latency_ns.lt_") => v }
+      assert(buckets.sum === m("multi_get.requests"))
+      val Seq(p50, p99, p999) = Seq("p50", "p99", "p999").map(q => m(s"multi_get.latency_ns.$q"))
+      assert(p50 > 0 && p50 <= p99 && p99 <= p999)
+      assert(java.lang.Long.bitCount(p999) === 1, s"p999 $p999 is not a bucket bound")
+    } finally {
+      remote.close(); server.close(); local.close()
+    }
+  }
+
   test("remote range: paged globally-ordered scan == in-process cursor; swaps fail loud") {
     import spark.implicits._
     val store = DomainStore.create(
