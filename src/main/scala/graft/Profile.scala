@@ -88,13 +88,16 @@ object Profile {
   }
 
   /** `plan` with its per-JVM counters (expression ids, plan ids, RDD
-    * ids, lambda class ids) and identity hashes (binary literals,
-    * lambdas) masked, so an unchanged plan writes the same file in every
-    * run and a before/after diff shows only real changes. */
+    * ids, lambda class ids), identity hashes (binary literals, lambdas)
+    * and callsite line numbers (`IndexDelete.scala:360` on a checkpoint's
+    * RDD) masked, so an unchanged plan writes the same file in every run,
+    * and after edits elsewhere in its source files, and a before/after
+    * diff shows only real changes. */
   private[graft] def masked(plan: String): String =
     plan.replaceAll("#\\d+", "#").replaceAll("plan_id=\\d+", "plan_id=")
       .replaceAll("RDD\\[\\d+]", "RDD[]").replaceAll("\\[B@\\p{XDigit}+", "[B@")
       .replaceAll("Lambda\\$\\d+/0x\\p{XDigit}+@\\p{XDigit}+", "Lambda")
+      .replaceAll("(\\w+\\.scala):\\d+", "$1:_")
 
   /** (shuffle exchanges, reused exchanges or stages) in a plan's tree
     * string. Shuffles match on tree prefixes only, so one nested under a

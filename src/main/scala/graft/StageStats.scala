@@ -5,9 +5,9 @@ import org.apache.spark.scheduler._
 
 /**
  * Job-group-scoped stage statistics for `graft.Profile` and the
- * plan-shape pins: tracks per-stage (tasks, max task ms, sum task ms)
- * plus shuffle write records and bytes for every job whose group id
- * starts with `groupPrefix` — the CLAUDE.md job-group scoping rule,
+ * plan-shape pins: counts the jobs and tracks per-stage (tasks, max task
+ * ms, sum task ms) plus shuffle write records and bytes for every job
+ * whose group id starts with `groupPrefix` — the CLAUDE.md job-group scoping rule,
  * robust when other jobs share the SparkContext. `report` prints the
  * executed stages as (tasks, max, mean, skew): a straggler reads as
  * skew (max/mean) ≫ 1 WITHIN a stage; balanced-but-heavy stages read ≈ 1.
@@ -25,6 +25,8 @@ private[graft] final class StageStats(val groupPrefix: String) extends SparkList
   // shuffle write bytes)
   private val stats =
     new java.util.concurrent.ConcurrentHashMap[Int, (Int, Long, Long, Long, Long)]()
+  /** Jobs started in a matching group. */
+  val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
   val shuffleRecords = new java.util.concurrent.atomic.AtomicLong(0L)
   val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0L)
   // the pending drain sentinel's job group and its arrival latch
@@ -38,11 +40,13 @@ private[graft] final class StageStats(val groupPrefix: String) extends SparkList
     val group = Option(j.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
     val s = sentinel
     if (s != null && group.contains(s._1)) s._2.countDown()
-    else if (group.exists(_.startsWith(groupPrefix)))
+    else if (group.exists(_.startsWith(groupPrefix))) {
+      jobs.incrementAndGet()
       j.stageInfos.foreach { si =>
         stages.add(si.stageId)
         names.put(si.stageId, si.name.takeWhile(_ != '\n').take(60))
       }
+    }
   }
 
   override def onTaskEnd(t: SparkListenerTaskEnd): Unit =

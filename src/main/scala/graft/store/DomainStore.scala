@@ -249,11 +249,9 @@ class DomainStore(val root: Path, val spec: DomainSpec, conf: Configuration) {
   /** kv-sorted write: the same one-shuffle plan as the datasource path
     * (shard routed to its own task, sorted by (shard, key) — already the
     * order [[KvFile.write]] requires), but the terminal operator streams
-    * each shard's rows into `shard=<i>/part-0.kv` from the executor.
-    * Commit is attempt-scoped tmp + delete + rename, same protocol (and
-    * same determinism argument) as the index sidecars. Rows are keyed by
-    * their shard VALUE, never the task/partition id (the narrow-coalesce
-    * trap: one task can see several upstream partitions). */
+    * each shard's rows into `shard=<i>/part-0.kv` from the executor, and
+    * builds the shard's index sidecar in the same task
+    * ([[DomainStore.writeKvShardFile]] has the commit protocol). */
   private def writeKvShards(kv: DataFrame, version: Long, partitions: Option[Int] = None): Unit = {
     // mkdirs so an all-empty build still publishes a readable version dir
     versions.versionPath(version).getFileSystem(conf).mkdirs(versions.versionPath(version))
@@ -284,43 +282,78 @@ class DomainStore(val root: Path, val spec: DomainSpec, conf: Configuration) {
 
   /** Terminal write of (shard, key, value) rows ALREADY sorted by
     * (shard, key) within each partition: streams each shard's run into
-    * `shard=<i>/part-0.kv` from the shard's own task. Shared by the
-    * canonical build (post-shuffle) and [[DomainStore.transcode]]'s
-    * zero-shuffle path (layout-reporting scan). Rows are keyed by their
-    * shard VALUE, never the task/partition id (the narrow-coalesce trap:
-    * one task can see several upstream partitions). */
+    * `shard=<i>/part-0.kv` from the shard's own task, and its index
+    * sidecar with it. Shared by the canonical build (post-shuffle) and
+    * [[DomainStore.transcode]]'s zero-shuffle path (layout-reporting
+    * scan). */
   private def writeSortedKvRows(sorted: DataFrame, version: Long): Unit = {
     val spark = sorted.sparkSession
     import spark.implicits._
     val confEntries = DomainStore.serializableConf(conf)
     val base = versions.versionPath(version).toString
-    val compressed = format == "kvz"
-    val blockSize = kvzBlockSize
+    val (compressed, blockSize, ix) = (format == "kvz", kvzBlockSize, indexerOpt)
     sorted
       .as[(Int, Array[Byte], Array[Byte])]
-      .mapPartitions { it =>
+      .foreachPartition { (it: Iterator[(Int, Array[Byte], Array[Byte])]) =>
         val c = DomainStore.rebuildConf(confEntries)
-        // consecutive-shard grouping: rows arrive sorted by (shard, key)
-        new Iterator[Int] {
-          private var row: (Int, Array[Byte], Array[Byte]) =
-            if (it.hasNext) it.next() else null
-          def hasNext: Boolean = row != null
-          def next(): Int = {
-            val shard = row._1
-            val rows = new Iterator[(Array[Byte], Array[Byte])] {
-              def hasNext: Boolean = row != null && row._1 == shard
-              def next(): (Array[Byte], Array[Byte]) = {
-                val r = row
-                row = if (it.hasNext) it.next() else null
-                (r._2, r._3)
-              }
-            }
-            DomainStore.writeKvShardFile(base, shard, rows, c, compressed, blockSize)
-            shard
-          }
+        DomainStore.shardRuns(it)(_._1).foreach { case (shard, run) =>
+          DomainStore.writeKvShardFile(
+            base, shard, run.map(r => (r._2, r._3)), c, compressed, blockSize, ix)
         }
       }
-      .count() // the action; per-shard counts are not needed
+  }
+
+  /** A kv patch's rewrite: only the delta moves. Its rows — (shard, key,
+    * value, isDelete), a delete carrying no value — are routed and sorted
+    * by (shard, key) exactly as [[shardedSorted]] routes a delta write,
+    * and the task that owns affected shard s streams the old version's
+    * shard-s files once ([[DomainStore.mergeDelta]]) into the new shard
+    * file and its sidecar. The old shard never becomes Spark rows, is
+    * never shuffled and never re-sorted: it is already sorted on disk.
+    * A shard the merge leaves empty writes no dir (it reads as empty). */
+  private def mergeKvShards(
+      delta: DataFrame,
+      oldVersion: Long,
+      newVersion: Long,
+      affected: Set[Int]): Unit = {
+    val spark = delta.sparkSession
+    import spark.implicits._
+    versions.versionPath(newVersion).getFileSystem(conf).mkdirs(versions.versionPath(newVersion))
+    if (affected.isEmpty) return
+    val confEntries = DomainStore.serializableConf(conf)
+    val base = versions.versionPath(newVersion).toString
+    // link-aware old shard dirs, resolved here so executors never read
+    // a links manifest
+    val oldDirs = affected.iterator.map(s => s -> shardDirStrOf(oldVersion, s)).toMap
+    val (compressed, blockSize, ix, suffix) = (format == "kvz", kvzBlockSize, indexerOpt, fileSuffix)
+    delta
+      .repartition(affected.size, col("shard"))
+      .sortWithinPartitions("shard", "key")
+      .as[(Int, Array[Byte], Array[Byte], Boolean)]
+      .foreachPartition { (it: Iterator[(Int, Array[Byte], Array[Byte], Boolean)]) =>
+        val c = DomainStore.rebuildConf(confEntries)
+        DomainStore.shardRuns(it)(_._1).foreach { case (shard, run) =>
+          val dir = new Path(oldDirs(shard))
+          val fs = dir.getFileSystem(c)
+          val readers = DomainStore.shardFiles(fs, dir, suffix).map { st =>
+            val r = KvFile.open(fs, st.getPath)
+            // also closed on task completion: an open kvz reader keeps
+            // its decoded blocks in the shared cache budget
+            Option(org.apache.spark.TaskContext.get())
+              .foreach(_.addTaskCompletionListener[Unit](_ => r.close()))
+            r
+          }
+          try {
+            val old = readers match {
+              case Seq(r) => r.iterator
+              case rs => KvMerge.byKey(rs.map(_.iterator))
+            }
+            val merged = DomainStore.mergeDelta(old, run.map(r => (r._2, r._3, r._4)))
+            if (merged.hasNext)
+              DomainStore.writeKvShardFile(base, shard, merged, c, compressed, blockSize, ix)
+          } finally readers.foreach(_.close())
+        }
+      }
   }
 
   /** The canonical write plan: add shard column, route each shard to exactly
@@ -343,17 +376,16 @@ class DomainStore(val root: Path, val spec: DomainSpec, conf: Configuration) {
     }
 
   /**
-   * Build per-shard index sidecars for a (not yet published) version — the
-   * write half of the Indexer SPI (W5). Two distributed passes, both cheap
-   * relative to the write they follow:
-   *  1. exact per-shard key counts via `groupBy(shard).count()` — the scan
-   *     projects no data column, so parquet answers it from footer row
-   *     counts (near-metadata-only);
-   *  2. a column-pruned key scan grouped by shard; the task that owns a
-   *     shard streams its keys through [[Indexer.build]] (single-pass,
-   *     bounded memory) and writes `shard=<i>/_index.bin` straight from the
-   *     executor — artifacts never funnel through the driver, so 64k shards
-   *     of ~MB sidecars stay off the driver heap.
+   * Build per-shard index sidecars for a (not yet published) datasource
+   * version — the write half of the Indexer SPI (W5) for parquet, orc and
+   * memory domains. kv domains never come here: their writer builds each
+   * shard's sidecar in the task that writes the shard
+   * ([[DomainStore.writeKvShardFile]]). One distributed pass: a
+   * column-pruned key scan grouped by shard; the task that owns a shard
+   * streams its keys through a [[DomainStore.KeySpill]] into
+   * [[Indexer.build]] and writes `shard=<i>/_index.bin` straight from the
+   * executor — artifacts never funnel through the driver, so 64k shards
+   * of ~MB sidecars stay off the driver heap.
    * No-op when the spec names no indexer. `onlyShards` limits the pass to
    * rewritten shards on an upsert (untouched shards carry their sidecars
    * through copy-forward, inside the shard dir).
@@ -361,84 +393,21 @@ class DomainStore(val root: Path, val spec: DomainSpec, conf: Configuration) {
   private def buildIndex(
       spark: SparkSession,
       version: Long,
-      onlyShards: Option[Set[Int]]): Unit = indexerOpt.foreach { ix =>
+      onlyShards: Option[Set[Int]]): Unit = indexerOpt.filter(_ => !isKv).foreach { ix =>
     import spark.implicits._
-    import scala.jdk.CollectionConverters._
-    // kv domains take the dedicated keys-only pass (value bytes skipped,
-    // not parsed); datasource formats rely on column pruning instead.
-    val scan =
-      if (isKv) kvKeysScan(spark, version, onlyShards.map(_.toSeq))
-      else prunedScan(spark, version, onlyShards.map(_.toSeq))
-        .select(col("shard"), col("key"))
     val confEntries = DomainStore.serializableConf(conf)
     val base = versions.versionPath(version).toString
-    scan.as[(Int, Array[Byte])]
+    prunedScan(spark, version, onlyShards.map(_.toSeq))
+      .select(col("shard"), col("key"))
+      .as[(Int, Array[Byte])]
       .groupByKey(_._1)
       .mapGroups { (shard, rows) =>
-        // The Indexer SPI wants the exact count BEFORE the first key
-        // (bloom sizing). A separate count pass was a whole extra scan
-        // job per publish (plus a driver collect shipped into this
-        // closure) — at 64Ki shards a full remote keys scan just to size
-        // blooms. Instead: drain the group ONCE into an executor-local
-        // spill file while counting, then re-stream it into the build —
-        // bounded memory, local sequential I/O, one job per publish.
-        // Spill onto the executor's SPARK LOCAL DIRS (the scratch disks
-        // shuffle files live on), not java.io.tmpdir: on real executors
-        // tmp is often a small root partition while spark.local.dir /
-        // SPARK_LOCAL_DIRS point at the big disks (r16 verdict item 3).
-        // The finally below deletes the spill on every non-fatal path; a
-        // task completion listener is the backstop for a task that ends
-        // another way. (deleteOnExit would add a JVM-global entry per
-        // shard build, never removed, for the executor's lifetime.)
-        val spill = DomainStore.createSpillFile(
-          s"graft-index-$shard-", ".keys", DomainStore.sparkLocalDir(shard))
-        Option(org.apache.spark.TaskContext.get())
-          .foreach(_.addTaskCompletionListener[Unit](_ => spill.delete()))
+        val spill = new DomainStore.KeySpill(shard)
         val artifact =
-          try {
-            var n = 0L
-            val out = new java.io.DataOutputStream(new java.io.BufferedOutputStream(
-              new java.io.FileOutputStream(spill), 1 << 16))
-            try rows.foreach { r => out.writeInt(r._2.length); out.write(r._2); n += 1L }
-            finally out.close()
-            val in = new java.io.DataInputStream(new java.io.BufferedInputStream(
-              new java.io.FileInputStream(spill), 1 << 16))
-            try {
-              require(n <= Int.MaxValue,
-                s"buildIndex: shard $shard holds $n keys (> Int.MaxValue) — reshard before indexing")
-              val keys = Iterator.fill(n.toInt) {
-                val len = in.readInt(); val b = new Array[Byte](len)
-                in.readFully(b); b
-              }
-              ix.build(n, keys)
-            } finally in.close()
-          } finally spill.delete()
-        val c = DomainStore.rebuildConf(confEntries)
-        val dst = new Path(new Path(base, s"shard=$shard"), Indexer.SidecarName)
-        // Attempt-scoped temp + rename: two attempts of this group
-        // (speculation, a zombie executor) writing the final path
-        // directly could interleave into a truncated sidecar that
-        // survives publish. The artifact is deterministic for a shard,
-        // so every interleaving of delete/rename across attempts lands
-        // the same bytes. The pre-rename delete also makes a REBUILD
-        // over a pre-existing sidecar (retry after a partial failure, an
-        // indexer/fpp config change on an unpublished version) replace
-        // the stale artifact on filesystems where rename-to-existing
-        // fails (HDFS) instead of silently keeping it. Worst case — an
-        // attempt deletes and dies before renaming — leaves no sidecar,
-        // which reads as "always maybe": slower, never wrong.
-        val tmp = new Path(new Path(base, s"shard=$shard"),
-          s"${Indexer.SidecarName}.${java.util.UUID.randomUUID()}.tmp")
-        val fs = dst.getFileSystem(c)
-        val out = fs.create(tmp, false)
-        try out.write(artifact) finally out.close()
-        fs.delete(dst, false)
-        if (!fs.rename(tmp, dst)) {
-          val lost = fs.exists(dst) // another attempt re-committed in between
-          fs.delete(tmp, false)
-          if (!lost) throw new java.io.IOException(
-            s"buildIndex: could not commit sidecar $dst")
-        }
+          try { rows.foreach(r => spill.add(r._2)); spill.build(ix) }
+          finally spill.discard()
+        DomainStore.commitSidecar(
+          new Path(base, s"shard=$shard"), artifact, DomainStore.rebuildConf(confEntries))
         shard
       }
       .count() // the action; the returned ids are not needed
@@ -946,42 +915,6 @@ class DomainStore(val root: Path, val spec: DomainSpec, conf: Configuration) {
       .toDF("key", "value", "shard")
   }
 
-  /** Keys-only kv scan (shard, key): rides [[KvFile.Reader.keysIterator]],
-    * so value bytes are skipped via the record headers instead of parsed —
-    * an index build over a kv domain does key-sized I/O instead of
-    * reading the whole shard twice. (Parquet/ORC get this for free from
-    * column pruning; the kv format needs the dedicated pass because its
-    * scan is a flatMap, invisible to Catalyst's pruning.) */
-  private def kvKeysScan(spark: SparkSession, version: Long, shards: Option[Seq[Int]]): DataFrame = {
-    import spark.implicits._
-    val confEntries = DomainStore.serializableConf(conf)
-    val wanted = shards.getOrElse(0 until numShards)
-    val suffix = fileSuffix
-    if (wanted.isEmpty)
-      return spark.emptyDataset[(Int, Array[Byte])].toDF("shard", "key")
-    spark.createDataset(wanted.toSeq.map(s => (s, shardDirStrOf(version, s))))
-      .repartition(math.min(wanted.size, spark.sparkContext.defaultParallelism))
-      .flatMap { case (s, dir) =>
-        val c = DomainStore.rebuildConf(confEntries)
-        val d = new Path(dir)
-        val fs = d.getFileSystem(c)
-        if (!fs.exists(d)) Iterator.empty
-        else fs.listStatus(d).iterator
-          .filter(_.getPath.getName.endsWith(suffix))
-          .flatMap { st =>
-            val r = KvFile.open(fs, st.getPath)
-            Option(org.apache.spark.TaskContext.get())
-              .foreach(_.addTaskCompletionListener[Unit](_ => r.close()))
-            new Iterator[(Int, Array[Byte])] {
-              private val it = r.keysIterator
-              def hasNext: Boolean = { val h = it.hasNext; if (!h) r.close(); h }
-              def next(): (Int, Array[Byte]) = (s, it.next())
-            }
-          }
-      }
-      .toDF("shard", "key")
-  }
-
   // --------------------------------------------------- index read side (W5)
 
   /** Deserialized sidecar probes, LRU-cached per (version, shard):
@@ -1344,7 +1277,9 @@ class DomainStore(val root: Path, val spec: DomainSpec, conf: Configuration) {
    * copy-forward of untouched shards (reference synchronizeVersions,
    * DomainStore.java:156-180): shards that receive no new keys are published
    * into the new version as raw file copies — no decode, no shuffle. Only
-   * shards with new data are re-merged and rewritten.
+   * shards with new data are rewritten; on kv domains each one by a single
+   * task that streams the old shard file against its sorted slice of the
+   * delta (see [[patch]]).
    *
    * A delta that repeats a key is rejected (SURVEY §7.4: there is no
    * deterministic "last" among Spark rows within one batch) unless
@@ -1364,9 +1299,9 @@ class DomainStore(val root: Path, val spec: DomainSpec, conf: Configuration) {
    * Takedown publish: a new version in which `keys` are ABSENT — the
    * delete half of the update lifecycle (a training-data pipeline gets
    * takedown requests; `upsert` can only add or overwrite). Upsert-shaped
-   * cost: only the shards a named key routes to are rewritten (their
-   * surviving rows re-merged without the named keys), every other shard
-   * copies forward as a raw file copy — O(delta), never O(domain).
+   * cost: only the shards a named key routes to are rewritten (on kv
+   * domains, one streaming merge per shard that drops the named keys;
+   * see [[patch]]), every other shard copies forward as a raw file copy.
    * Deleting a key that is absent is a no-op for correctness (its shard
    * still rewrites — membership isn't probed first); deleting EVERY key
    * of a shard publishes it legitimately empty (readers treat a missing
@@ -1391,6 +1326,20 @@ class DomainStore(val root: Path, val spec: DomainSpec, conf: Configuration) {
    * per key like [[upsert]]; `deleteKeys` are absent from the new
    * version; a key in BOTH is ambiguous and fails loud. Cost is the
    * union of the two deltas' affected shards.
+   *
+   * How the affected shards are rewritten:
+   *  - kv domains (the servable formats): only the delta moves. Upserts
+   *    and delete keys become one (shard, key, value, isDelete) frame,
+   *    routed and sorted by (shard, key) — a shuffle the size of the
+   *    delta. The task owning shard s streams the old version's shard-s
+   *    file (link-aware) once, merges it with its delta run in unsigned
+   *    key order (the delta wins, deletes drop out, old records keep file
+   *    order), and writes the new shard file and its index sidecar in the
+   *    same pass. The output is byte-identical to a fresh [[write]] of
+   *    the patched pairs on a unique-key domain.
+   *  - datasource formats rebuild each affected shard from rows: the old
+   *    rows minus every touched key (an anti-join), plus the upserts,
+   *    through the canonical sharded sort, then an index pass.
    */
   def patch(
       spark: SparkSession,
@@ -1472,25 +1421,28 @@ class DomainStore(val root: Path, val spec: DomainSpec, conf: Configuration) {
           "patch: a key appears in both the upserts and the delete set — " +
             "ambiguous (drop it from one side)")
       }
-      val touched = (up.map(_.select("key")), del.map(_.select("key"))) match {
-        case (Some(a), Some(b)) => a.unionByName(b)
-        case (Some(a), None) => a
-        case (None, Some(b)) => b
-        case (None, None) => throw new IllegalArgumentException(
-          "patch: pass at least one of upserts / deleteKeys")
-      }
-      val oldAffected = prunedScan(spark, oldVersion, Some(affected.toSeq))
-      val survivors = oldAffected.join(touched, Seq("key"), "left_anti")
-      val merged = up match {
-        case Some(u) => u.unionByName(survivors)
-        case None => survivors
-      }
-
       versions.createVersion(newVersion)
       voidVersionCaches(newVersion) // same-id rebuild: old sidecars/links are void
       try {
-        writeShards(merged.select("key", "value"), newVersion,
-          partitions = Some(affected.size))
+        if (isKv) {
+          // a delete is marked by its flag, never by a null value: a
+          // stored null value is legal
+          val delta = Seq(
+            up.map(_.select(col("shard"), col("key"), col("value"), lit(false).as("_del"))),
+            del.map(_.select(col("shard"), col("key"),
+              lit(null).cast("binary").as("value"), lit(true).as("_del")))
+          ).flatten.reduce(_.unionByName(_))
+          mergeKvShards(delta, oldVersion, newVersion, affected)
+        } else {
+          // datasource formats rebuild each affected shard from rows: the
+          // old rows minus every touched key, plus the upserts
+          val touched = Seq(up, del).flatten.map(_.select("key")).reduce(_.unionByName(_))
+          val survivors = prunedScan(spark, oldVersion, Some(affected.toSeq))
+            .join(touched, Seq("key"), "left_anti")
+          val merged = up.fold(survivors)(_.unionByName(survivors))
+          writeShards(merged.select("key", "value"), newVersion,
+            partitions = Some(affected.size))
+        }
         if (linked) {
           // Manifest-linked publish: untouched shards are RECORDED
           // (`shard -> physical-host version`, resolved one-hop — a link
@@ -2213,31 +2165,170 @@ object DomainStore {
     * for a shard's row set (sorted input, content-only layout): whichever
     * attempt committed, the bytes are the ones every attempt would have
     * written. Rebuild-over-existing never happens for data files — a
-    * version dir is fresh by the createVersion/failVersion lifecycle. */
+    * version dir is fresh by the createVersion/failVersion lifecycle.
+    *
+    * With an `indexer`, every written key is also teed into a
+    * [[KeySpill]], and once the data file is committed the same task
+    * builds and commits the shard's `_index.bin` from it — no second
+    * read of the shard. */
   private[store] def writeKvShardFile(
       base: String,
       shard: Int,
       rows: Iterator[(Array[Byte], Array[Byte])],
       conf: Configuration,
       compressed: Boolean = false,
-      blockSize: Int = KvzFile.DefaultBlockSize): Long = {
+      blockSize: Int = KvzFile.DefaultBlockSize,
+      indexer: Option[Indexer] = None): Long = {
     val dir = new Path(base, s"shard=$shard")
     val dst = new Path(dir, KvFile.DataFileName)
     val tmp = new Path(dir, s"${KvFile.DataFileName}.${java.util.UUID.randomUUID()}.tmp")
     val fs = dst.getFileSystem(conf)
     fs.mkdirs(dir)
-    val out = new java.io.DataOutputStream(
-      new java.io.BufferedOutputStream(fs.create(tmp, false), 1 << 16))
-    val n = try {
-      if (compressed) KvzFile.write(out, rows, blockSize) else KvFile.write(out, rows)
-    } finally out.close()
-    if (!fs.rename(tmp, dst)) {
-      val lost = fs.exists(dst) // another attempt already committed — it wins
-      fs.delete(tmp, false)
-      if (!lost) throw new java.io.IOException(s"writeKvShardFile: could not commit $dst")
-    }
-    n
+    val spill = indexer.map(_ => new KeySpill(shard))
+    try {
+      val teed = spill.fold(rows)(sp => rows.map { r => sp.add(r._1); r })
+      val out = new java.io.DataOutputStream(
+        new java.io.BufferedOutputStream(fs.create(tmp, false), 1 << 16))
+      val n = try {
+        if (compressed) KvzFile.write(out, teed, blockSize) else KvFile.write(out, teed)
+      } finally out.close()
+      if (!fs.rename(tmp, dst)) {
+        val lost = fs.exists(dst) // another attempt already committed — it wins
+        fs.delete(tmp, false)
+        if (!lost) throw new java.io.IOException(s"writeKvShardFile: could not commit $dst")
+      }
+      for (ix <- indexer; sp <- spill) commitSidecar(dir, sp.build(ix), conf)
+      n
+    } finally spill.foreach(_.discard())
   }
+
+  /** Commit one shard's index artifact as `<shardDir>/_index.bin`.
+    * Attempt-scoped temp + rename: two attempts of one shard's task
+    * (speculation, a zombie executor) writing the final path directly
+    * could interleave into a truncated sidecar that survives publish.
+    * The artifact is deterministic for a shard, so every interleaving of
+    * delete/rename across attempts lands the same bytes. The pre-rename
+    * delete also makes a REBUILD over a pre-existing sidecar (retry after
+    * a partial failure, an indexer/fpp config change on an unpublished
+    * version) replace the stale artifact on filesystems where
+    * rename-to-existing fails (HDFS) instead of silently keeping it.
+    * Worst case — an attempt deletes and dies before renaming — leaves
+    * no sidecar, which reads as "always maybe": slower, never wrong. */
+  private[store] def commitSidecar(shardDir: Path, artifact: Array[Byte], conf: Configuration): Unit = {
+    val dst = new Path(shardDir, Indexer.SidecarName)
+    val tmp = new Path(shardDir, s"${Indexer.SidecarName}.${java.util.UUID.randomUUID()}.tmp")
+    val fs = dst.getFileSystem(conf)
+    val out = fs.create(tmp, false)
+    try out.write(artifact) finally out.close()
+    fs.delete(dst, false)
+    if (!fs.rename(tmp, dst)) {
+      val lost = fs.exists(dst) // another attempt re-committed in between
+      fs.delete(tmp, false)
+      if (!lost) throw new java.io.IOException(s"could not commit sidecar $dst")
+    }
+  }
+
+  /** One shard's index-build spill. The Indexer SPI wants the exact key
+    * count BEFORE the first key (bloom sizing), so keys are appended to
+    * an executor-local file as they stream past, counted, and re-streamed
+    * into [[Indexer.build]]: bounded memory, local sequential I/O, no
+    * second pass over the shard. The file lives on the executor's SPARK
+    * LOCAL DIRS (the scratch disks shuffle files live on), not
+    * java.io.tmpdir: on real executors tmp is often a small root
+    * partition. [[discard]] deletes it on every non-fatal path; a task
+    * completion listener is the backstop for a task that ends another way
+    * (deleteOnExit would add a JVM-global entry per shard build, never
+    * removed, for the executor's lifetime). */
+  private[store] final class KeySpill(shard: Int) {
+    private val file = createSpillFile(s"graft-index-$shard-", ".keys", sparkLocalDir(shard))
+    Option(org.apache.spark.TaskContext.get())
+      .foreach(_.addTaskCompletionListener[Unit](_ => file.delete()))
+    private val out = new java.io.DataOutputStream(new java.io.BufferedOutputStream(
+      new java.io.FileOutputStream(file), 1 << 16))
+    private var n = 0L
+
+    def add(key: Array[Byte]): Unit = { out.writeInt(key.length); out.write(key); n += 1L }
+
+    /** The shard's artifact, built from every key added so far. */
+    def build(ix: Indexer): Array[Byte] = {
+      out.close()
+      require(n <= Int.MaxValue,
+        s"index build: shard $shard holds $n keys (> Int.MaxValue) — reshard before indexing")
+      val in = new java.io.DataInputStream(new java.io.BufferedInputStream(
+        new java.io.FileInputStream(file), 1 << 16))
+      try {
+        val keys = Iterator.fill(n.toInt) {
+          val b = new Array[Byte](in.readInt())
+          in.readFully(b)
+          b
+        }
+        ix.build(n, keys)
+      } finally in.close()
+    }
+
+    def discard(): Unit = try out.close() finally file.delete()
+  }
+
+  /** The consecutive runs of `rows` that share a shard, for a stream
+    * sorted by shard first: each element is (shard, its run). Whatever a
+    * consumer leaves unread of a run is skipped before the next one.
+    * Runs are keyed by the shard VALUE, never the task/partition id (the
+    * narrow-coalesce trap: one task can see several upstream
+    * partitions). */
+  private[store] def shardRuns[R](rows: Iterator[R])(shardOf: R => Int): Iterator[(Int, Iterator[R])] =
+    new Iterator[(Int, Iterator[R])] {
+      private val it = rows.buffered
+      private var run: Iterator[R] = Iterator.empty
+      def hasNext: Boolean = {
+        while (run.hasNext) run.next()
+        it.hasNext
+      }
+      def next(): (Int, Iterator[R]) = {
+        if (!hasNext) throw new NoSuchElementException("no more shard runs")
+        val shard = shardOf(it.head)
+        run = new Iterator[R] {
+          def hasNext: Boolean = it.hasNext && shardOf(it.head) == shard
+          def next(): R =
+            if (hasNext) it.next() else throw new NoSuchElementException(s"shard $shard run ended")
+        }
+        (shard, run)
+      }
+    }
+
+  /** Merge one shard's old records with its sorted delta — (key, value,
+    * isDelete) in unsigned key order — the two-pointer pass of a kv
+    * patch. An old key below the delta head is kept; an old key equal to
+    * it loses every stored copy; a delta upsert is emitted and a delta
+    * delete emits nothing. Old records keep their file order, so a key
+    * stored twice (a build without dedupKeys) keeps both copies in order
+    * unless the delta names it. A key both upserted and deleted (only
+    * reachable with patch's disjoint check off) keeps the upsert. */
+  private[store] def mergeDelta(
+      old: Iterator[(Array[Byte], Array[Byte])],
+      delta: Iterator[(Array[Byte], Array[Byte], Boolean)]): Iterator[(Array[Byte], Array[Byte])] =
+    new Iterator[(Array[Byte], Array[Byte])] {
+      private val o = old.buffered
+      private val d = delta.buffered
+      private var pending: (Array[Byte], Array[Byte]) = null
+      def hasNext: Boolean = {
+        while (pending == null && (o.hasNext || d.hasNext)) {
+          if (o.hasNext && (!d.hasNext || java.util.Arrays.compareUnsigned(o.head._1, d.head._1) < 0))
+            pending = o.next()
+          else {
+            val (k, v, isDelete) = d.next()
+            while (o.hasNext && java.util.Arrays.equals(o.head._1, k)) o.next()
+            if (!isDelete) pending = (k, v)
+          }
+        }
+        pending != null
+      }
+      def next(): (Array[Byte], Array[Byte]) = {
+        if (!hasNext) throw new NoSuchElementException("merge exhausted")
+        val r = pending
+        pending = null
+        r
+      }
+    }
 
   /** Row count from a single data file's footer metadata. Runs on the
     * driver pool for small domains and inside executor tasks for large
@@ -2401,7 +2492,8 @@ object DomainStore {
     * destination writer — at 100 TB that is a format conversion, not a
     * re-shuffle of the corpus. Every other (src, dst) pairing routes
     * through the canonical one-shuffle write. Index sidecars are rebuilt
-    * for the destination either way (the spec carries the indexer). */
+    * for the destination either way (the spec carries the indexer); a kv
+    * destination writes each one in the task that writes its shard. */
   def transcode(
       spark: SparkSession,
       srcRoot: String,
@@ -2437,8 +2529,7 @@ object DomainStore {
         dst.writeSortedKvRows(
           src.readPartitioned(spark, srcVersion)
             .select(col("shard"), col("key"), col("value")),
-          version)
-        dst.buildIndex(spark, version, onlyShards = None)
+          version) // sidecars are written with their shard files
         dst.writeOriginsManifest(version, _ => version)
         dst.writeLinksManifest(version, Map.empty) // full rewrite: cache refresh, no file
         dst.versions.succeedVersion(version)

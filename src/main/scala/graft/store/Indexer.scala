@@ -11,9 +11,11 @@ import org.apache.spark.util.sketch.BloomFilter
  * `IdentityIndexer.java:11-16`). There the hook ran per key-value pair
  * against the local persistence; the Spark-first re-expression builds one
  * compact per-shard sidecar artifact from the shard's key stream at publish
- * time (a distributed, column-pruned pass — see
- * [[DomainStore]]'s `buildIndex`), and the read path consults the artifact
- * to answer "definitely absent" without touching any data file.
+ * time — kv domains in the task that writes the shard
+ * (`DomainStore.writeKvShardFile`), datasource domains in one
+ * column-pruned pass after the write (`DomainStore.buildIndex`) — and the
+ * read path consults the artifact to answer "definitely absent" without
+ * touching any data file.
  *
  * Why this matters at scale: md5-mod routing says where a key WOULD live if
  * it exists; an index says whether it IS there. Point lookups of absent
@@ -30,10 +32,11 @@ trait Indexer extends Serializable {
   /** Build the artifact for one shard from its key stream. Called once per
     * shard inside an executor task; must be single-pass and bounded-memory
     * (a 100 TB domain's shard can hold millions of keys — do not buffer
-    * them). `expectedKeys` is an exact sizing hint (the caller counts each
-    * shard with a metadata-cheap aggregation first). The iterator is only
-    * valid DURING this call: the caller streams it from a task-scoped
-    * spill file reclaimed when `build` returns, so the iterator must be
+    * them). `expectedKeys` is the exact number of keys the iterator
+    * yields: the caller counts them while spilling them to a task-local
+    * file (`DomainStore.KeySpill`), then re-streams that file. So the
+    * iterator is only valid DURING this call: the spill file is
+    * reclaimed when `build` returns, and the iterator must be
     * fully consumed (or abandoned) here — never captured into the
     * artifact or a lazy structure. */
   def build(expectedKeys: Long, keys: Iterator[Array[Byte]]): Array[Byte]

@@ -274,7 +274,9 @@ object KvFile {
       rows: Iterator[(Array[Byte], Array[Byte])]): Long = {
     out.write(Magic)
     var pos = 4L
-    val offsets = scala.collection.mutable.ArrayBuffer[Long]()
+    // growable primitive array: a buffer of Long boxes one object per record
+    var offsets = new Array[Long](1024)
+    var n = 0
     // span CRCs over records AND the offset index — everything in
     // [4, crcOffset) — computed as the bytes stream past (a record may
     // straddle a span boundary; feed() splits it). Covering the index
@@ -309,7 +311,10 @@ object KvFile {
       require(
         prev == null || java.util.Arrays.compareUnsigned(prev, k) <= 0,
         "kv-sorted: input rows not sorted by key")
-      offsets += pos
+      if (n == offsets.length)
+        offsets = java.util.Arrays.copyOf(offsets, math.min(n.toLong * 2, Int.MaxValue - 8).toInt)
+      offsets(n) = pos
+      n += 1
       hdrBuf.clear()
       hdrBuf.putInt(k.length)
       hdrBuf.putInt(if (v == null) -1 else v.length)
@@ -325,21 +330,23 @@ object KvFile {
     val indexOffset = pos
     val entryBuf = new Array[Byte](8)
     val entryBB = ByteBuffer.wrap(entryBuf)
-    offsets.foreach { o =>
+    var i = 0
+    while (i < n) {
       entryBB.clear()
-      entryBB.putLong(o)
+      entryBB.putLong(offsets(i))
       out.write(entryBuf)
       feed(entryBuf, 0, 8)
+      i += 1
     }
     if (spanFill > 0) crcs += crc.getValue.toInt
-    val crcOffset = indexOffset + 8L * offsets.length
+    val crcOffset = indexOffset + 8L * n
     crcs.foreach(out.writeInt)
     out.writeLong(indexOffset)
-    out.writeLong(offsets.length.toLong)
+    out.writeLong(n.toLong)
     out.writeLong(crcOffset)
     out.writeInt(CrcSpanBytes)
     out.write(TrailerMagicV2)
-    offsets.length.toLong
+    n.toLong
   }
 
   /** Exclusive upper bound of the key range sharing `prefix`: the prefix

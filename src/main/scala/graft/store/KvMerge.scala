@@ -3,9 +3,9 @@ package graft.store
 /**
  * K-way merge of key-ordered record streams into one globally ordered
  * stream (unsigned-lexicographic byte order) — the ONE merge definition
- * shared by [[KvDomainReader.RangeCursor]]'s globalOrder mode and
- * [[RingClient.rangeScan]]'s cross-host merge, so the two can never
- * drift.
+ * shared by [[KvDomainReader.RangeCursor]]'s globalOrder mode,
+ * [[RingClient.rangeScan]]'s cross-host merge and a kv patch's read of a
+ * shard dir holding several files, so they can never drift.
  *
  * Heap-based: each `next()` costs O(log k), not the O(k) scan-all-heads
  * formulation — at the shard counts this engine targets (hundreds to

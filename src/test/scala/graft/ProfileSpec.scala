@@ -42,11 +42,13 @@ class ProfileSpec extends SparkSuite {
     val raw = "(3) HashAggregate [codegen id : 12]\n" +
       "Keys [1]: [l_returnflag#12]\nPushedFilters: [EqualTo(key,[B@1f2e3d)]\n" +
       "Arguments: MapPartitionsRDD[42] at localCheckpoint at IndexDelete.scala:360, plan_id=7\n" +
+      "(4) Exchange [codegen id : 3] at DomainStore.scala:1446 hashpartitioning(shard#7, 32)\n" +
       "Arguments: graft.operators.Multimodal$$$Lambda$5748/0x00007fc7113f5000@f456711, obj#19"
     assert(Profile.masked(raw) ===
       "(3) HashAggregate [codegen id : 12]\n" +
         "Keys [1]: [l_returnflag#]\nPushedFilters: [EqualTo(key,[B@)]\n" +
-        "Arguments: MapPartitionsRDD[] at localCheckpoint at IndexDelete.scala:360, plan_id=\n" +
+        "Arguments: MapPartitionsRDD[] at localCheckpoint at IndexDelete.scala:_, plan_id=\n" +
+        "(4) Exchange [codegen id : 3] at DomainStore.scala:_ hashpartitioning(shard#, 32)\n" +
         "Arguments: graft.operators.Multimodal$$$Lambda, obj#")
   }
 
