@@ -18,13 +18,10 @@ import org.apache.spark.scheduler._
  */
 private[graft] final class StageStats(val groupPrefix: String) extends SparkListener {
   require(groupPrefix.nonEmpty, "an empty prefix would match every job group")
-  private val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+  private val stageIds = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
   // stage id -> name (callsite), for attribution in reports
   private val names = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-  // per stage: (tasks, max task ms, sum task ms, shuffle write records,
-  // shuffle write bytes)
-  private val stats =
-    new java.util.concurrent.ConcurrentHashMap[Int, (Int, Long, Long, Long, Long)]()
+  private val stats = new java.util.concurrent.ConcurrentHashMap[Int, StageStats.Stage]()
   /** Jobs started in a matching group. */
   val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
   val shuffleRecords = new java.util.concurrent.atomic.AtomicLong(0L)
@@ -43,7 +40,7 @@ private[graft] final class StageStats(val groupPrefix: String) extends SparkList
     else if (group.exists(_.startsWith(groupPrefix))) {
       jobs.incrementAndGet()
       j.stageInfos.foreach { si =>
-        stages.add(si.stageId)
+        stageIds.add(si.stageId)
         names.put(si.stageId, si.name.takeWhile(_ != '\n').take(60))
       }
     }
@@ -54,22 +51,28 @@ private[graft] final class StageStats(val groupPrefix: String) extends SparkList
     // would double-count durations and shuffle write records, over-reporting
     // skew under local retry noise
     if (t.reason == org.apache.spark.Success &&
-        stages.contains(t.stageId) && t.taskInfo != null) {
-      val (recs, bytes) =
-        if (t.taskMetrics != null && t.taskMetrics.shuffleWriteMetrics != null)
-          (t.taskMetrics.shuffleWriteMetrics.recordsWritten,
-            t.taskMetrics.shuffleWriteMetrics.bytesWritten)
-        else (0L, 0L)
-      stats.merge(t.stageId,
-        (1, t.taskInfo.duration, t.taskInfo.duration, recs, bytes),
-        (a, b) => (a._1 + b._1, math.max(a._2, b._2), a._3 + b._3,
-          a._4 + b._4, a._5 + b._5))
+        stageIds.contains(t.stageId) && t.taskInfo != null) {
+      val m = Option(t.taskMetrics)
+      val (recs, bytes) = m.flatMap(m => Option(m.shuffleWriteMetrics))
+        .fold((0L, 0L))(w => (w.recordsWritten, w.bytesWritten))
+      val read = m.flatMap(m => Option(m.shuffleReadMetrics)).fold(0L)(_.recordsRead)
+      val d = t.taskInfo.duration
+      stats.merge(t.stageId, StageStats.Stage(1, d, d, recs, bytes, read),
+        (a, b) => StageStats.Stage(a.tasks + b.tasks, math.max(a.maxMs, b.maxMs),
+          a.sumMs + b.sumMs, a.recordsWritten + b.recordsWritten,
+          a.bytesWritten + b.bytesWritten, math.min(a.minRecordsRead, b.minRecordsRead)))
       shuffleRecords.addAndGet(recs)
       shuffleBytes.addAndGet(bytes)
     }
 
   /** Stages that ran at least one successful task. */
   def stageCount: Int = stats.size
+
+  /** Every stage that ran, in stage-id order, with its name (callsite). */
+  def stages: Seq[(String, StageStats.Stage)] = {
+    import scala.jdk.CollectionConverters._
+    stats.asScala.toSeq.sortBy(_._1).map { case (sid, st) => (names.getOrDefault(sid, ""), st) }
+  }
 
   /** Block until every listener event posted before this call has been
     * delivered. Runs one tiny job in a sibling group that does not match
@@ -91,7 +94,7 @@ private[graft] final class StageStats(val groupPrefix: String) extends SparkList
   def report(tag: String): Unit = {
     import scala.jdk.CollectionConverters._
     stats.asScala.toSeq.sortBy(_._1).foreach {
-      case (sid, (nt, mx, sm, recs, bytes)) =>
+      case (sid, StageStats.Stage(nt, mx, sm, recs, bytes, _)) =>
         println(f"[$tag]   stage $sid%4d tasks $nt%4d max $mx%6d ms " +
           f"mean ${sm / math.max(nt, 1)}%6d ms  skew ${mx.toDouble * nt / math.max(sm, 1)}%4.1fx" +
           f"  wrote $recs%8d rec ${bytes / (1024 * 1024)}%5d MB  " +
@@ -101,6 +104,14 @@ private[graft] final class StageStats(val groupPrefix: String) extends SparkList
 }
 
 private[graft] object StageStats {
+
+  /** One stage's successful tasks: count, longest and summed duration,
+    * shuffle records and bytes written, and the fewest shuffle records
+    * any one task read (0 on a stage that reads no shuffle, or when a
+    * shuffle leaves a task idle). */
+  final case class Stage(
+      tasks: Int, maxMs: Long, sumMs: Long, recordsWritten: Long, bytesWritten: Long,
+      minRecordsRead: Long)
 
   /** Run `body` in job group `group` with a fresh listener attached;
     * return its value and the drained stats. The listener is removed

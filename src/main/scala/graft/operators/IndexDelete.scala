@@ -126,11 +126,8 @@ private[graft] object IndexDelete {
       val dels = after.where(size(col("kept")) === 0).select(col("key"))
       // one publish: shrunken cells upserted, emptied cells absent — two
       // separate publishes would expose an intermediate version holding
-      // empty cells and double the copy-forward. ups/dels partition ONE
-      // checkpointed frame by size(kept), so the clash check is skipped
-      // (disjoint by construction — no need to pay its Spark job here).
-      index.patch(spark, Some(ups), Some(dels), newVersion, checkDisjoint = false,
-        linked = linked)
+      // empty cells and double the copy-forward.
+      index.patch(spark, Some(ups), Some(dels), newVersion, linked = linked)
     } finally r.unpersist()
   }
 
@@ -245,8 +242,7 @@ private[graft] object IndexDelete {
         .join(sized.select(col("key")), Seq("key"), "left_anti")
         .join(current.where(col("cur").isNotNull).select(col("key")), Seq("key"),
           "left_semi")
-      index.patch(spark, Some(ups), Some(dels), newVersion, checkDisjoint = false,
-        linked = linked)
+      index.patch(spark, Some(ups), Some(dels), newVersion, linked = linked)
     } finally { adds.unpersist(); rms.unpersist() }
   }
 

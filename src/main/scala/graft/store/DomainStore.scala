@@ -197,20 +197,29 @@ class DomainStore(val root: Path, val spec: DomainSpec, conf: Configuration) {
    * only visible to readers after the token is written (all-or-nothing
    * publish, reference ElephantDBTap.java:166-188).
    */
-  def write(df: DataFrame, version: Long, dedupKeys: Boolean = false): Unit = {
-    versions.createVersion(version)
-    voidVersionCaches(version) // same-id rebuild: old sidecars/links are void
+  def write(df: DataFrame, version: Long, dedupKeys: Boolean = false): Unit = publishing(version) {
     val kv0 = df.select(col("key"), col("value"))
     val kv = if (dedupKeys) kv0.dropDuplicates("key") else kv0
+    writeShards(kv, version, 0 until numShards)
+    buildIndex(df.sparkSession, version, onlyShards = None)
+    writeOriginsManifest(version, _ => version) // full rebuild: every shard is new
+    // full rebuild = no links; the explicit empty write REFRESHES the
+    // links cache — a failed LINKED publish retried as a full build at
+    // the SAME version id would otherwise keep serving the stale link
+    // map on this instance (silent stale reads from origin dirs)
+    writeLinksManifest(version, Map.empty)
+  }
+
+  /** The one version lifecycle of every publish ([[write]], [[patch]],
+    * [[compact]], [[DomainStore.transcode]]): create the version, void
+    * this instance's caches of any earlier build under the same id, run
+    * `body`, then write the token — or, if `body` throws, mark the
+    * version failed and drop the failed attempt's links. */
+  private def publishing(version: Long)(body: => Unit): Unit = {
+    versions.createVersion(version)
+    voidVersionCaches(version) // same-id rebuild: old sidecars/links are void
     try {
-      writeShards(kv, version)
-      buildIndex(df.sparkSession, version, onlyShards = None)
-      writeOriginsManifest(version, _ => version) // full rebuild: every shard is new
-      // full rebuild = no links; the explicit empty write REFRESHES the
-      // links cache — a failed LINKED publish retried as a full build at
-      // the SAME version id would otherwise keep serving the stale link
-      // map on this instance (silent stale reads from origin dirs)
-      writeLinksManifest(version, Map.empty)
+      body
       versions.succeedVersion(version)
     } catch {
       case e: Throwable =>
@@ -220,24 +229,15 @@ class DomainStore(val root: Path, val spec: DomainSpec, conf: Configuration) {
     }
   }
 
-  /** Materialize the canonical sharded+sorted layout of a version — the
-    * shared write engine of [[write]] and [[upsert]]. Datasource formats
+  /** Materialize the canonical sharded+sorted layout of `targets`, the
+    * shards `kv`'s keys route to — every shard on a full [[write]], the
+    * affected ones on a datasource-format [[patch]]. Datasource formats
     * go through Spark's writer; the kv format streams each shard's sorted
-    * run through [[KvFile.write]] inside the shard's own task.
-    *
-    * `partitions`: write-task count. The full build defaults to one task
-    * per shard (numShards — retry/straggler granularity at corpus scale);
-    * an UPSERT rewrites only its affected shards and must size the job to
-    * THEM — scheduling numShards tasks for a 5-key delta is 64k empty
-    * tasks of pure overhead at the 100 TB shard counts (measured: ~80 s
-    * of scheduling for a no-op at 64k on the metadata-scale smoke).
-    * Correctness needs only "each shard's rows in ONE task, sorted by
-    * (shard, key)" — hash-partitioning by the shard VALUE gives that at
-    * any partition count ([[writeSortedKvRows]] splits consecutive shard
-    * groups; the datasource writer's partitionBy splits by value). */
-  private def writeShards(kv: DataFrame, version: Long, partitions: Option[Int] = None): Unit =
-    if (isKv) writeKvShards(kv, version, partitions)
-    else shardedSorted(kv, partitions)
+    * run through [[KvFile.write]] inside the shard's own task. */
+  private def writeShards(kv: DataFrame, version: Long, targets: Seq[Int]): Unit = {
+    val sorted = shardedSorted(kv.withColumn("shard", routedShard(col("key"))), targets)
+    if (isKv) writeKvShards(sorted, version)
+    else sorted
       .write
       .format(format)
       .option("compression", "zstd")
@@ -245,6 +245,7 @@ class DomainStore(val root: Path, val spec: DomainSpec, conf: Configuration) {
       .options(fsOptions)
       .partitionBy("shard")
       .save(versions.versionPath(version).toString)
+  }
 
   /** kv-sorted write: the same one-shuffle plan as the datasource path
     * (shard routed to its own task, sorted by (shard, key) — already the
@@ -252,11 +253,10 @@ class DomainStore(val root: Path, val spec: DomainSpec, conf: Configuration) {
     * each shard's rows into `shard=<i>/part-0.kv` from the executor, and
     * builds the shard's index sidecar in the same task
     * ([[DomainStore.writeKvShardFile]] has the commit protocol). */
-  private def writeKvShards(kv: DataFrame, version: Long, partitions: Option[Int] = None): Unit = {
+  private def writeKvShards(sorted: DataFrame, version: Long): Unit = {
     // mkdirs so an all-empty build still publishes a readable version dir
     versions.versionPath(version).getFileSystem(conf).mkdirs(versions.versionPath(version))
-    writeSortedKvRows(
-      shardedSorted(kv, partitions).select(col("shard"), col("key"), col("value")), version)
+    writeSortedKvRows(sorted.select(col("shard"), col("key"), col("value")), version)
   }
 
   /** kvz engine tuning via the spec's persistenceOptions — the
@@ -305,8 +305,8 @@ class DomainStore(val root: Path, val spec: DomainSpec, conf: Configuration) {
 
   /** A kv patch's rewrite: only the delta moves. Its rows — (shard, key,
     * value, isDelete), a delete carrying no value — are routed and sorted
-    * by (shard, key) exactly as [[shardedSorted]] routes a delta write,
-    * and the task that owns affected shard s streams the old version's
+    * by [[shardedSorted]], one task per affected shard, and the task that
+    * owns affected shard s streams the old version's
     * shard-s files once ([[DomainStore.mergeDelta]]) into the new shard
     * file and its sidecar. The old shard never becomes Spark rows, is
     * never shuffled and never re-sorted: it is already sorted on disk.
@@ -326,9 +326,7 @@ class DomainStore(val root: Path, val spec: DomainSpec, conf: Configuration) {
     // a links manifest
     val oldDirs = affected.iterator.map(s => s -> shardDirStrOf(oldVersion, s)).toMap
     val (compressed, blockSize, ix, suffix) = (format == "kvz", kvzBlockSize, indexerOpt, fileSuffix)
-    delta
-      .repartition(affected.size, col("shard"))
-      .sortWithinPartitions("shard", "key")
+    shardedSorted(delta, affected.toSeq)
       .as[(Int, Array[Byte], Array[Byte], Boolean)]
       .foreachPartition { (it: Iterator[(Int, Array[Byte], Array[Byte], Boolean)]) =>
         val c = DomainStore.rebuildConf(confEntries)
@@ -356,24 +354,18 @@ class DomainStore(val root: Path, val spec: DomainSpec, conf: Configuration) {
       }
   }
 
-  /** The canonical write plan: add shard column, route each shard to exactly
-    * one task, sort each shard by key. */
-  private def shardedSorted(kv: DataFrame, partitions: Option[Int] = None): DataFrame =
-    partitions match {
-      case None =>
-        // full build: exactly one task per shard (_pid = shard rank)
-        kv.withColumn("shard", routedShard(col("key")))
-          .withColumn("_pid", DomainStore.shardToPartitionId(col("shard"), numShards))
-          .repartition(numShards, col("_pid"))
-          .sortWithinPartitions("shard", "key")
-          .drop("_pid")
-      case Some(p) =>
-        // delta write: size the job to the delta — hash by shard VALUE
-        // keeps each shard whole in one task at any partition count
-        kv.withColumn("shard", routedShard(col("key")))
-          .repartition(math.max(1, p), col("shard"))
-          .sortWithinPartitions("shard", "key")
-    }
+  /** The one write plan of every publish: route the rows of each of
+    * `targets` (the shards the rows' `shard` column can hold) to its own
+    * task, and sort each shard by key. A full build passes every shard;
+    * a delta passes only its affected shards, so a 5-key delta schedules
+    * a handful of tasks, never numShards (64k empty tasks at the 100 TB
+    * shard counts). */
+  private def shardedSorted(rows: DataFrame, targets: Seq[Int]): DataFrame =
+    rows
+      .withColumn("_pid", DomainStore.shardToPartitionId(col("shard"), targets, numShards))
+      .repartition(math.max(1, targets.size), col("_pid"))
+      .sortWithinPartitions("shard", "key")
+      .drop("_pid")
 
   /**
    * Build per-shard index sidecars for a (not yet published) datasource
@@ -1327,6 +1319,11 @@ class DomainStore(val root: Path, val spec: DomainSpec, conf: Configuration) {
    * version; a key in BOTH is ambiguous and fails loud. Cost is the
    * union of the two deltas' affected shards.
    *
+   * Before any version exists, one census job over the deltas finds the
+   * affected shards and rejects a null key, a repeated upsert key
+   * (unless `dedupKeys`) and a key on both sides; at most numShards + 1
+   * rows reach the driver whatever the delta's size.
+   *
    * How the affected shards are rewritten:
    *  - kv domains (the servable formats): only the delta moves. Upserts
    *    and delete keys become one (shard, key, value, isDelete) frame,
@@ -1348,10 +1345,6 @@ class DomainStore(val root: Path, val spec: DomainSpec, conf: Configuration) {
       newVersion: Long,
       dedupKeys: Boolean = false,
       distributeAbove: Int = DomainStore.DefaultDistributeAbove,
-      // the upsert/delete overlap guard costs one small join job; pass
-      // false ONLY when the two sides derive from a DISJOINT split of
-      // one frame (the index-removal engine) — external callers keep it
-      checkDisjoint: Boolean = true,
       // `linked = true`: record untouched shards as shard->origin links
       // (`_links.json`) instead of copying their dirs forward — publish
       // I/O becomes O(delta), the high-shard-count / 100 TB regime's
@@ -1359,10 +1352,13 @@ class DomainStore(val root: Path, val spec: DomainSpec, conf: Configuration) {
       // (readers resolve links; GC keeps referenced origins alive —
       // VersionedStore.cleanupImpl). Default stays copy-forward.
       linked: Boolean = false): Unit = {
+    if (upserts.isEmpty && deleteKeys.isEmpty) throw new IllegalArgumentException(
+      "patch: pass at least one of upserts / deleteKeys")
     val oldVersion = latestVersion
     val n = numShards
-    // The deltas feed several consumers (affected-shard scan, the union,
-    // and the anti-join); they are small by contract, so materialize once.
+    // The deltas feed the census and the rewrite; they are small by
+    // contract, so materialize once. A repeated delete key is harmless
+    // (the census counts it once; the merge drops a key once).
     val up = upserts.map { df =>
       val kv0 = df.select(col("key"), col("value"))
       (if (dedupKeys) kv0.dropDuplicates("key") else kv0)
@@ -1370,60 +1366,40 @@ class DomainStore(val root: Path, val spec: DomainSpec, conf: Configuration) {
         .persist()
     }
     val del = deleteKeys.map(
-      _.select(col("key")).dropDuplicates("key")
-        .withColumn("shard", routedShard(col("key")))
-        .persist())
+      _.select(col("key")).withColumn("shard", routedShard(col("key"))).persist())
     try {
-      // ONE census action replaces three sequential driver jobs over the
-      // deltas (the duplicate-key require + a shardsOf collect per side;
-      // guide §1.2 — three passes over the delta become one): per (side,
-      // shard), count + distinct-key count. Summing per-shard distincts
-      // gives the side's distinct count because a key's shard is a
-      // function of the key (no key spans shards). At most 2·numShards
-      // rows reach the driver regardless of delta size. A null key
-      // routes to a null shard and is caught per side below.
-      val census: Array[(String, Option[Int], Long, Long)] = {
-        val sides = Seq(
-          up.map(_.select(col("shard"), col("key")).withColumn("_side", lit("u"))),
-          del.map(_.select(col("shard"), col("key")).withColumn("_side", lit("d")))
-        ).flatten
-        if (sides.isEmpty) throw new IllegalArgumentException(
-          "patch: pass at least one of upserts / deleteKeys")
-        sides.reduce(_.unionByName(_))
-          .groupBy(col("_side"), col("shard"))
-          .agg(org.apache.spark.sql.functions.count(lit(1)).as("_cnt"),
-            count_distinct(col("key")).as("_dcnt"))
-          .collect()
-          .map(r => (r.getString(0),
-            if (r.isNullAt(1)) None else Some(r.getInt(1)),
-            r.getLong(2), r.getLong(3)))
+      // ONE census action: per (shard, key), its upsert rows and whether
+      // the delete set names it, then per shard the sums. A key's shard
+      // is a function of the key (no key spans shards), so the per-shard
+      // figures add up to the side totals. At most numShards + 1 rows
+      // reach the driver regardless of delta size — the +1 is the null
+      // shard a null key routes to.
+      val census = Seq(
+        up.map(_.select(col("shard"), col("key"), lit(1L).as("_u"), lit(false).as("_d"))),
+        del.map(_.select(col("shard"), col("key"), lit(0L).as("_u"), lit(true).as("_d")))
+      ).flatten.reduce(_.unionByName(_))
+        .groupBy(col("shard"), col("key"))
+        .agg(sum(col("_u")).as("_u"), max(col("_d")).as("_d"))
+        .groupBy(col("shard"))
+        .agg(sum(col("_u")), count_if(col("_u") > 0), count_if(col("_d")),
+          count_if(col("_u") > 0 && col("_d")))
+        .collect()
+        .map(r => DomainStore.CensusRow(
+          if (r.isNullAt(0)) None else Some(r.getInt(0)),
+          r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
+      census.find(_.shard.isEmpty).foreach { nulls =>
+        require(nulls.upsertKeys == 0, "upsert delta contains a null key")
+        require(nulls.deleteKeys == 0, "delete key set contains a null key")
       }
-      def sideShards(side: String, what: String): Set[Int] = {
-        val rows = census.filter(_._1 == side)
-        require(rows.forall(_._2.isDefined), s"$what contains a null key")
-        rows.flatMap(_._2).toSet
-      }
-      up.foreach { _ =>
-        val upRows = census.filter(_._1 == "u")
-        val total = upRows.map(_._3).sum
-        val distinct = upRows.map(_._4).sum
-        if (!dedupKeys) require(
-          total == distinct,
-          s"upsert delta repeats keys ($total rows, $distinct distinct) — " +
-            "pass dedupKeys = true or pre-aggregate the delta")
-      }
-      val affected =
-        up.map(_ => sideShards("u", "upsert delta")).getOrElse(Set.empty) ++
-          del.map(_ => sideShards("d", "delete key set")).getOrElse(Set.empty)
-      if (checkDisjoint) for (u <- up; d <- del) {
-        val clash = u.join(d, Seq("key"), "left_semi").limit(1).collect()
-        require(clash.isEmpty,
-          "patch: a key appears in both the upserts and the delete set — " +
-            "ambiguous (drop it from one side)")
-      }
-      versions.createVersion(newVersion)
-      voidVersionCaches(newVersion) // same-id rebuild: old sidecars/links are void
-      try {
+      val (upsertRows, upsertKeys) = (census.map(_.upsertRows).sum, census.map(_.upsertKeys).sum)
+      require(upsertRows == upsertKeys,
+        s"upsert delta repeats keys ($upsertRows rows, $upsertKeys distinct) — " +
+          "pass dedupKeys = true or pre-aggregate the delta")
+      require(census.forall(_.bothSides == 0),
+        "patch: a key appears in both the upserts and the delete set — " +
+          "ambiguous (drop it from one side)")
+      val affected = census.flatMap(_.shard).toSet
+      publishing(newVersion) {
         if (isKv) {
           // a delete is marked by its flag, never by a null value: a
           // stored null value is legal
@@ -1440,8 +1416,7 @@ class DomainStore(val root: Path, val spec: DomainSpec, conf: Configuration) {
           val survivors = prunedScan(spark, oldVersion, Some(affected.toSeq))
             .join(touched, Seq("key"), "left_anti")
           val merged = up.fold(survivors)(_.unionByName(survivors))
-          writeShards(merged.select("key", "value"), newVersion,
-            partitions = Some(affected.size))
+          writeShards(merged.select("key", "value"), newVersion, affected.toSeq)
         }
         if (linked) {
           // Manifest-linked publish: untouched shards are RECORDED
@@ -1479,12 +1454,6 @@ class DomainStore(val root: Path, val spec: DomainSpec, conf: Configuration) {
           if (affected(s)) newVersion
           else prevOrigins.flatMap(_.get(s)).getOrElse(oldVersion),
           alsoPresent = linksOf(newVersion).keySet)
-        versions.succeedVersion(newVersion)
-      } catch {
-        case e: Throwable =>
-          versions.failVersion(newVersion)
-          linksCache.remove(newVersion) // the failed attempt's links are void
-          throw e
       }
     } finally {
       up.foreach(_.unpersist())
@@ -1515,21 +1484,13 @@ class DomainStore(val root: Path, val spec: DomainSpec, conf: Configuration) {
       newVersion: Long,
       distributeAbove: Int = DomainStore.DefaultDistributeAbove): Unit = {
     val oldVersion = latestVersion
-    versions.createVersion(newVersion)
-    voidVersionCaches(newVersion) // same-id rebuild: old sidecars/links are void
-    try {
+    publishing(newVersion) {
       copyForward(oldVersion, newVersion, 0 until numShards, distributeAbove)
       writeLinksManifest(newVersion, Map.empty) // self-contained; refreshes the cache
       val prevOrigins = DomainStore.readOriginsAt(
         root.getFileSystem(conf), versions.versionPath(oldVersion))
       writeOriginsManifest(newVersion, s =>
         prevOrigins.flatMap(_.get(s)).getOrElse(oldVersion))
-      versions.succeedVersion(newVersion)
-    } catch {
-      case e: Throwable =>
-        versions.failVersion(newVersion)
-        linksCache.remove(newVersion)
-        throw e
     }
   }
 
@@ -2301,8 +2262,8 @@ object DomainStore {
     * it loses every stored copy; a delta upsert is emitted and a delta
     * delete emits nothing. Old records keep their file order, so a key
     * stored twice (a build without dedupKeys) keeps both copies in order
-    * unless the delta names it. A key both upserted and deleted (only
-    * reachable with patch's disjoint check off) keeps the upsert. */
+    * unless the delta names it. A repeated delete key drops nothing more;
+    * patch's census rejects every other key the delta names twice. */
   private[store] def mergeDelta(
       old: Iterator[(Array[Byte], Array[Byte])],
       delta: Iterator[(Array[Byte], Array[Byte], Boolean)]): Iterator[(Array[Byte], Array[Byte])] =
@@ -2520,40 +2481,44 @@ object DomainStore {
           s"restore or re-publish the named shards first:\n  ${bad.mkString("\n  ")}")
     }
     val dst = create(dstRoot, src.spec.copy(persistenceFormat = dstFormat), conf)
-    if (src.isKv && dst.isKv) {
-      dst.versions.createVersion(version)
-      dst.voidVersionCaches(version) // same-id rebuild: old sidecars/links are void
-      try {
-        dst.versions.versionPath(version).getFileSystem(conf)
-          .mkdirs(dst.versions.versionPath(version))
-        dst.writeSortedKvRows(
-          src.readPartitioned(spark, srcVersion)
-            .select(col("shard"), col("key"), col("value")),
-          version) // sidecars are written with their shard files
-        dst.writeOriginsManifest(version, _ => version)
-        dst.writeLinksManifest(version, Map.empty) // full rewrite: cache refresh, no file
-        dst.versions.succeedVersion(version)
-      } catch {
-        case e: Throwable =>
-          dst.versions.failVersion(version)
-          dst.linksCache.remove(version)
-          throw e
-      }
+    if (src.isKv && dst.isKv) dst.publishing(version) {
+      dst.versions.versionPath(version).getFileSystem(conf)
+        .mkdirs(dst.versions.versionPath(version))
+      dst.writeSortedKvRows(
+        src.readPartitioned(spark, srcVersion)
+          .select(col("shard"), col("key"), col("value")),
+        version) // sidecars are written with their shard files
+      dst.writeOriginsManifest(version, _ => version)
+      dst.writeLinksManifest(version, Map.empty) // full rewrite: cache refresh, no file
     } else {
       dst.write(src.readVersion(spark, srcVersion).select("key", "value"), version)
     }
     dst
   }
 
+  /** Census of a patch's deltas for one shard (`None`: the null shard a
+    * null key routes to): upsert rows, distinct upsert keys, distinct
+    * delete keys, and keys named on both sides. */
+  private final case class CensusRow(
+      shard: Option[Int], upsertRows: Long, upsertKeys: Long, deleteKeys: Long, bothSides: Long)
+
   /**
-   * shard -> partition-id mapping that makes `repartition(n, _pid)` place
-   * shard i in partition i *exactly* (Spark's HashPartitioning is
-   * pmod(murmur3(x), n), which would co-locate several shards per task and
-   * leave others empty — bad file sizing at scale). The preimage table is
-   * computed once on the driver: for each target partition t, an int j with
-   * pmod(murmur3_hash(j), n) == t.
+   * shard -> partition-id mapping that makes `repartition(targets.size,
+   * _pid)` place the k-th smallest of `targets` in partition k *exactly*
+   * (Spark's HashPartitioning is pmod(murmur3(x), n), which on the shard
+   * value would co-locate several shards per task and leave others empty
+   * — bad file sizing at scale, and a skewed delta merge). Rows must
+   * route to one of `targets`; the full build passes `0 until numShards`.
    */
-  private[graft] def shardToPartitionId(shard: Column, n: Int): Column = {
+  private[graft] def shardToPartitionId(shard: Column, targets: Seq[Int], numShards: Int): Column =
+    element_at(typedlit(partitionIds(targets, numShards).toIndexedSeq), shard + 1)
+
+  /** The table behind [[shardToPartitionId]], computed once on the driver:
+    * entry s of a target shard holds an int j with
+    * pmod(murmur3_hash(j), targets.size) == rank of s in `targets`
+    * (entries of other shards are never read). */
+  private[graft] def partitionIds(targets: Seq[Int], numShards: Int): Array[Int] = {
+    val n = targets.size
     val preimage = new Array[Int](n)
     val found = new Array[Boolean](n)
     var j = 0
@@ -2563,7 +2528,9 @@ object DomainStore {
       if (!found(t)) { found(t) = true; preimage(t) = j; remaining -= 1 }
       j += 1
     }
-    element_at(typedlit(preimage.toIndexedSeq), shard + 1)
+    val ids = new Array[Int](numShards)
+    targets.sorted.iterator.zipWithIndex.foreach { case (s, rank) => ids(s) = preimage(rank) }
+    ids
   }
 
   private def pmodMurmur(value: Int, n: Int): Int = {

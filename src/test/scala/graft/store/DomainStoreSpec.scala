@@ -167,6 +167,22 @@ class DomainStoreSpec extends SparkSuite {
     assert(store.latestVersion === 5L)
   }
 
+  test("upsert of a null key fails naming the null key, never as a repeat; no version left behind") {
+    import spark.implicits._
+    val store = DomainStore.create(scratch("null-upsert"), DomainSpec(4), conf)
+    store.write(kv("a" -> "1"), 1L)
+    // one named key and one null key: two rows, one distinct non-null key
+    val withNull = Seq(Option("b"), None).toDF("k")
+      .select(when(col("k").isNotNull, utf8_bytes(col("k"))).as("key"), utf8_bytes(lit("v")).as("value"))
+    for (dedup <- Seq(false, true)) {
+      val e = intercept[IllegalArgumentException](store.upsert(spark, withNull, 2L, dedupKeys = dedup))
+      assert(e.getMessage.contains("null key"), s"dedupKeys = $dedup: ${e.getMessage}")
+    }
+    assert(store.latestVersion === 1L)
+    assert(store.versions.failedVersions.isEmpty && store.versions.inFlightVersions.isEmpty)
+    assert(!store.root.getFileSystem(conf).exists(store.versions.versionPath(2L)))
+  }
+
   test("patch: one version of upserts + deletes; overlapping key fails loud") {
     val store = DomainStore.create(scratch("patch"), DomainSpec(4), conf)
     store.write(kv("a" -> "1", "b" -> "2", "c" -> "3", "d" -> "4"), 1L)

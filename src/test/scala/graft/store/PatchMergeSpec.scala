@@ -3,6 +3,8 @@ package graft.store
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 
 import graft.{SparkSuite, StageStats}
 import graft.core.{DomainSpec, ShardIndex}
@@ -87,6 +89,49 @@ class PatchMergeSpec extends SparkSuite {
     assert(small <= 2L * deltaRows + censusRows,
       s"patch shuffled $small records for a $deltaRows-row delta")
     RamFileSystem.clear("patchmerge-scale")
+  }
+
+  test("the shard router gives each target shard its own partition: pmod(murmur3(pid), targets) = rank") {
+    val rnd = new scala.util.Random(20261020L)
+    for (_ <- 0 until 300) {
+      val numShards = 1 + rnd.nextInt(300)
+      val targets = rnd.shuffle((0 until numShards).toList).take(1 + rnd.nextInt(numShards))
+      val ids = DomainStore.partitionIds(targets, numShards)
+      targets.sorted.zipWithIndex.foreach { case (shard, rank) =>
+        // the partition Spark's repartition(targets.size, _pid) sends the id to
+        val partition = HashPartitioning(Seq(Literal(ids(shard))), targets.size)
+          .partitionIdExpression.eval(null)
+        assert(partition === rank, s"shard $shard of ${targets.size} targets (numShards $numShards)")
+      }
+    }
+  }
+
+  test("a two-sided kv patch over every shard: fixed job count, one shard per merge task") {
+    RamFileSystem.clear("patchmerge-route")
+    val shards = 32
+    val store = DomainStore.create("ramfs://patchmerge-route/d",
+      DomainSpec(shards, persistenceFormat = DomainSpec.KvSorted, indexer = bloom), conf)
+    store.write(kv((0 until 4000).map(i => s"key-$i" -> s"old-$i")), 1L)
+    val upserts = (0 until 300).map(i => s"key-$i" -> s"new-$i")
+    val deletes = (300 until 400).map(i => s"key-$i")
+    assert(upserts.map(p => ShardIndex.shardIndex(utf8(p._1), shards)).toSet.size === shards,
+      "the fixture must touch every shard")
+    val (_, stats) = StageStats.measure(spark.sparkContext, "patchmerge-route") {
+      store.patch(spark, Some(kv(upserts)), Some(keys(deletes)), 2L)
+    }
+    assert(store.get(spark, utf8("key-3")).map(str) === Some("new-3"))
+    assert(store.get(spark, utf8("key-333")).isEmpty)
+    assert(store.count(spark) === 3900L)
+    // the two cached deltas, the census's two shuffles and its collect,
+    // the merge's shuffle and its write. A census by (side, shard) plus a
+    // separate upsert/delete overlap join ran 12 jobs on this fixture.
+    assert(stats.jobs.get() === 7, stats.stages.mkString("\n"))
+    val merge = stats.stages.collect { case (name, st) if name.startsWith("foreachPartition") => st }
+    assert(merge.map(_.tasks) === Seq(shards))
+    // 32 tasks hold 32 shards and none is idle: one shard per task (a
+    // hash of the shard value puts two or three shards in some tasks)
+    assert(merge.head.minRecordsRead > 0, stats.stages.mkString("\n"))
+    RamFileSystem.clear("patchmerge-route")
   }
 
   test("kv write with an indexer runs no separate keys-scan job") {
